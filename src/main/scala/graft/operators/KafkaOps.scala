@@ -29,7 +29,9 @@ object KafkaOps {
   private def brokerFor(s: SparkSession, dir: String): String = synchronized {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val root = s"/tmp/graft_broker_$key"
+    // the segment format is part of the key: a broker cached by a build
+    // with another format is rebuilt, never read
+    val root = s"/tmp/graft_broker_v${SimBroker.FormatVersion}_$key"
     val marker = Paths.get(root, "_COMPLETE")
     if (Files.exists(marker)) return root
     val schema = AvroSchemaConverter.parse(avro.OrderEventSchemaJson)

@@ -6,7 +6,7 @@ import graft.functions.avro
 import graft.sources.kafkasim.SimBroker
 import org.apache.avro.generic.GenericData
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -17,7 +17,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *            ingested_at → parquet append with checkpoint
   *            (KafkaAvroToIceberg.scala:55-100)
   *   batch:   bounded offset-range read → same decode/enrich +
-  *            source="kafka-batch" lineage tag → count → append
+  *            source="kafka-batch" lineage tag → append, counted
+  *            in the same pass
   *            (KafkaBatchJob.java:70-98)
   *
   * The streaming path intentionally does NOT add `source` — the
@@ -144,40 +145,47 @@ object BronzeIngest {
          |  source STRING
          |) USING parquet""".stripMargin)
 
-  /** B6 against the session catalog: decode + enrich + atomic append
-    * into the DDL-declared table. insertInto is positional, so the
-    * projection pins the DDL column order explicitly. */
-  def batchJobToTable(spark: SparkSession, brokerRoot: String, topic: String,
-      startingOffsetsJson: String, endingOffsetsJson: String,
-      table: String = "bronze.db.orders"): Long = {
-    ensureBronzeTable(spark, table)
-    val wire = spark.read.format("kafkasim")
+  /** The bounded offset-range read both batch jobs start from, split
+    * into at least `defaultParallelism` input partitions so a topic
+    * with fewer partitions than cores still decodes on every core (the
+    * connector's `minPartitions`; each split reads only its own range). */
+  private def boundedWire(spark: SparkSession, brokerRoot: String,
+      topic: String, startingOffsetsJson: String,
+      endingOffsetsJson: String): DataFrame =
+    spark.read.format("kafkasim")
       .option("path", brokerRoot)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsetsJson)
       .option("endingOffsets", endingOffsetsJson)
       .option("failOnDataLoss", "false")
+      .option("minPartitions", spark.sparkContext.defaultParallelism)
       .load()
-    val decoded = decode(spark, wire)
+
+  /** B6 against the session catalog: decode + enrich + atomic append
+    * into the DDL-declared table; returns the rows appended. insertInto
+    * is positional, so the projection pins the DDL column order
+    * explicitly. The row count is observed on the written frame itself,
+    * so the range is read and decoded once, by the write's own job. */
+  def batchJobToTable(spark: SparkSession, brokerRoot: String, topic: String,
+      startingOffsetsJson: String, endingOffsetsJson: String,
+      table: String = "bronze.db.orders"): Long = {
+    ensureBronzeTable(spark, table)
+    val rows = Observation()
+    decode(spark, boundedWire(spark, brokerRoot, topic,
+        startingOffsetsJson, endingOffsetsJson))
       .withColumn("source", lit("kafka-batch"))
       .select(col("orderId"), col("amount"), col("ts"),
         col("ingested_at"), col("source"))
-    val n = decoded.count()
-    decoded.write.mode("append").insertInto(table)
-    n
+      .observe(rows, count(lit(1)).as("rows"))
+      .write.mode("append").insertInto(table)
+    rows.get("rows").asInstanceOf[Long]
   }
 
   def batchJob(spark: SparkSession, brokerRoot: String, topic: String,
       startingOffsetsJson: String, endingOffsetsJson: String,
       tableDir: String): Long = {
-    val wire = spark.read.format("kafkasim")
-      .option("path", brokerRoot)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsetsJson)
-      .option("endingOffsets", endingOffsetsJson)
-      .option("failOnDataLoss", "false")
-      .load()
-    val decoded = decode(spark, wire)
+    val decoded = decode(spark, boundedWire(spark, brokerRoot, topic,
+        startingOffsetsJson, endingOffsetsJson))
       .withColumn("source", lit("kafka-batch"))
     // Atomic append (the reference commits one Iceberg snapshot,
     // KafkaBatchJob.java:95-98): stage under a hidden dir inside the

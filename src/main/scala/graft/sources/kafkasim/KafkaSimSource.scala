@@ -5,6 +5,7 @@ import java.util
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -482,11 +483,18 @@ final class KafkaSimPartitionReader(p: KafkaSimInputPartition,
       case other => throw new IllegalArgumentException(s"unknown column $other")
     })
 
+  // one row reused for every record, as the built-in Kafka reader does:
+  // the scan's consumer projects each row before asking for the next
+  private val row = new GenericInternalRow(extractors.length)
+
   override def next(): Boolean =
     if (it.hasNext) { current = it.next(); true } else false
 
-  override def get(): InternalRow =
-    InternalRow.fromSeq(extractors.map(_(current)).toIndexedSeq)
+  override def get(): InternalRow = {
+    var i = 0
+    while (i < extractors.length) { row.update(i, extractors(i)(current)); i += 1 }
+    row
+  }
 
-  override def close(): Unit = ()
+  override def close(): Unit = it.close()
 }
