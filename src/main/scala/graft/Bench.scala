@@ -37,6 +37,36 @@ object Bench {
     }
   }
 
+  /** The file a finished run's JSON line goes to (stdout, the driver
+    * contract, always gets it). Only a complete, quiet run on the
+    * pin's own (sf, cpus) that is no slower than the pin — or
+    * `force`d — replaces `bench_out.json`:
+    *  - a `partial` run (BENCH_ONLY filter, or any query failed) sums
+    *    only some queries: `bench_out.partial.json`;
+    *  - a `hostLoaded` run is co-tenant noise: `bench_out.loaded.json`;
+    *  - a run on another SF or core count measures a different thing,
+    *    whatever its total (a quiet sf0.01 run is always "faster"
+    *    than the sf0.1 pin): `bench_out.loaded.json`, force or not —
+    *    re-pin a new rig with SPARK_GRAFT_BENCH_OUT=bench_out.json;
+    *  - a quiet run slower than the pin on fixed code + data means
+    *    undetected interference (the minimum only moves down):
+    *    `bench_out.loaded.json` unless `force` (a deliberate re-pin
+    *    after a change that legitimately slows the total).
+    * `pin` is the current `bench_out.json` text, if any. */
+  private[graft] def outFile(pin: Option[String], total: Double,
+      sf: String, cpus: Int, partial: Boolean, hostLoaded: Boolean,
+      force: Boolean): String = {
+    def field(k: String): Option[String] = pin.flatMap(
+      s""""$k":"?([^",}]*)""".r.findFirstMatchIn(_).map(_.group(1)))
+    val sameRig = pin.isEmpty ||
+      (field("sf").contains(sf) && field("cpus").contains(cpus.toString))
+    val slower = field("value").flatMap(_.toDoubleOption).exists(_ < total)
+    if (partial) "bench_out.partial.json"
+    else if (hostLoaded || !sameRig || (slower && !force))
+      "bench_out.loaded.json"
+    else "bench_out.json"
+  }
+
   def main(args: Array[String]): Unit = {
     // co-tenant load reading at PROCESS ENTRY — before the Spark
     // session and the warm-up phase saturate the cores and pollute
@@ -46,20 +76,8 @@ object Bench {
         .split(" ").take(3).mkString(" ")
       catch { case _: Throwable => "" }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // rank-literal prunes up to p09's token budget rewrite to
-      // map-side WindowGroupLimits (semantics-preserving; harness
-      // default so no QueryDef has to mutate session conf)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        operators.Pipeline.TokenBudget.toString)
-      .getOrCreate()
+    val cpus = Harness.defaultCpus
+    val spark = Harness.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // dev-loop what-if dials (driver never sets it): `;`- or
     // comma-separated k=v session confs, e.g.
@@ -166,52 +184,25 @@ object Bench {
     }
     val hostLoaded = load1(loadEntry) > 3.0 || spreadSuspect
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","legacy10_total":$legacyTotal,"queries":$qs,"failed":$failed,"reps":$repJson,"stat":"min_of_$reps","loadavg_entry":"$loadEntry","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","host_loaded":$hostLoaded,"spread_suspect":$spreadSuspect,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","legacy10_total":$legacyTotal,"queries":$qs,"failed":$failed,"reps":$repJson,"stat":"min_of_$reps","loadavg_entry":"$loadEntry","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","host_loaded":$hostLoaded,"spread_suspect":$spreadSuspect,"sf":"$sfDir","cpus":$cpus}"""
     // stdout is the driver contract, but sbt prefixes it with [info] —
     // also print to stderr and write the line to a file
     // (SPARK_GRAFT_BENCH_OUT, default bench_out.json) so the JSON is
     // machine-parseable regardless of how sbt decorates the streams
     println(json)
     System.err.println(json)
-    // a LOADED-host run must not clobber the committed quiet-host pin:
-    // divert its file artifact to a `.loaded` side file (stdout JSON —
-    // the driver contract — is unchanged), so the working tree keeps
-    // the newest LOW-LOAD run and a driver run on a busy host can't
-    // regress it
-    // second pin guard: even a run that LOOKS quiet must not replace a
-    // faster committed pin — on fixed code+data the minimum only moves
-    // down, so "quiet but slower" means undetected interference. A
-    // deliberate re-pin after a code/data change that legitimately
-    // slows the total sets SPARK_GRAFT_BENCH_FORCE=1.
-    // third pin guard: a BENCH_ONLY dev run covers a SUBSET of the
-    // headline set, so its total is incomparable with the pin (usually
-    // smaller — which sails through the slower-than-pin check and
-    // clobbers the full-set pin; it happened: an s12-only A/B run
-    // replaced the 13-query pin). Filtered runs always divert.
-    // fourth pin guard (r19, bitten live): a run where any query
-    // FAILED — e.g. the JVM took a SIGTERM mid-run and the remaining
-    // queries threw against a stopping SparkContext — sums only the
-    // queries that ran, so its total is incomparable with the pin
-    // the same way a filtered run's is (and FORCE must not override
-    // an incomplete measurement either: a partial total is wrong, not
-    // merely slow). Divert unconditionally.
-    val anyFailed = failed != "[]"
-    val outDefault = if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")
-        || anyFailed)
-        "bench_out.partial.json"
-      else if (hostLoaded) "bench_out.loaded.json"
-      else {
-        val pinned =
-          try {
-            val txt = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get("bench_out.json")), "UTF-8")
-            """"value":([0-9.eE+\-]+)""".r.findFirstMatchIn(txt)
-              .map(_.group(1).toDouble)
-          } catch { case _: Throwable => None }
-        val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
-        if (!force && pinned.exists(_ < total)) "bench_out.loaded.json"
-        else "bench_out.json"
-      }
+    // the pin guards live in [[outFile]]; a BENCH_ONLY dev run and a
+    // run where any query FAILED (e.g. the JVM took a SIGTERM mid-run
+    // and the rest threw against a stopping SparkContext) both sum a
+    // SUBSET of the headline set, so neither may replace the pin
+    val pin =
+      try Some(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("bench_out.json")), "UTF-8"))
+      catch { case _: Throwable => None }
+    val outDefault = outFile(pin, total, sfDir, cpus,
+      partial = sys.env.contains("SPARK_GRAFT_BENCH_ONLY") || failed != "[]",
+      hostLoaded = hostLoaded,
+      force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1"))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", outDefault)
     // the quiet pin is a single-line pointer (always the current best)
     // and is REPLACED; diverted loaded/slower runs APPEND as JSONL so

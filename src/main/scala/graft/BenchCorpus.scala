@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize a COMPLETE ×K bench corpus directory — the documented
   * `SPARK_GRAFT_SF_DIR` sweep mode: at sf0.1 every bench query sits
   * at the per-job scheduling floor (the r19 verdict's 8-vs-32-core
@@ -26,14 +24,7 @@ object BenchCorpus {
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val outDir =
       s"${System.getProperty("java.io.tmpdir")}/graft_scaleup_x$k"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-benchcorpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-benchcorpus")
     spark.sparkContext.setLogLevel("WARN")
     ScaleUp.build(spark, sfDir, outDir, k)
     Seq("customer", "supplier", "nation", "region").foreach { t =>

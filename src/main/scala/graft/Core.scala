@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, TimestampNTZType, TimestampType}
 
@@ -402,4 +403,25 @@ object Exact {
 
   def sqlAvg(x: String, scale: Int = 4): String =
     s"${sqlSum(x, scale)} / COUNT($x)"
+}
+
+object TopK {
+  /** Per-key top-k, the rank-and-prune shared by nearest neighbour,
+    * BM25/RRF top-n, canonical picks and candidate sets: adds `rank` as
+    * `row_number()` over `partitionBy(key).orderBy(order)` and keeps the
+    * rows with `rank <= k`. `key = Seq()` is a global top-k.
+    *
+    * Determinism contract: `order` must be TOTAL within a key — end it
+    * with the caller's id column, so tied scores break the same way in
+    * every run and in the DuckDB twin's `ROW_NUMBER() OVER (PARTITION
+    * BY key ORDER BY order)`.
+    *
+    * The prune compares the rank with a literal, so for k up to
+    * `spark.sql.optimizer.windowGroupLimitThreshold` Spark plans a
+    * map-side `WindowGroupLimit` below the shuffle (TopKPerKeySpec). */
+  def topKPerKey(df: DataFrame, key: Seq[Column], order: Seq[Column],
+      k: Int, rank: String): DataFrame =
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(key: _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of declared queries to files — the
   * optimization rounds' plan-evidence artifact
   * (`plans/r19/<query>_{before,after}.txt`). Usage:
@@ -19,17 +17,7 @@ object PlanDump {
     val names = args.lift(3).map(_.split(",").toSeq)
       .getOrElse(SparkEntry.headlines.map(_.name))
     val exec = args.lift(4).contains("exec")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        operators.Pipeline.TokenBudget.toString)
-      .getOrCreate()
+    val spark = Harness.session("graft-plandump")
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))

@@ -90,13 +90,10 @@ object RecallProbe {
     val corpus = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("c_id"), col("embedding").as("bv"))
       .withColumn("bn2", expr("vec_dot(bv, bv)"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("l2sq"), col("c_id"))
-    corpus.crossJoin(broadcast(sq))
-      .withColumn("l2sq",
-        col("an2") + col("bn2") - lit(2.0) * expr("vec_dot(av, bv)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    TopK.topKPerKey(corpus.crossJoin(broadcast(sq))
+        .withColumn("l2sq",
+          col("an2") + col("bn2") - lit(2.0) * expr("vec_dot(av, bv)")),
+        Seq(col("q_id")), Seq(col("l2sq"), col("c_id")), 1, "rn")
       .select(col("q_id"), col("c_id").as("true_nn"))
   }
 
@@ -225,14 +222,7 @@ object RecallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val which = args.lift(2).getOrElse("both")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recallprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session("graft-recallprobe")
     spark.sparkContext.setLogLevel("WARN")
 
     val xkDir = s"${System.getProperty("java.io.tmpdir")}/graft_scaleup_x$k"

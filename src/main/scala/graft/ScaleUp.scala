@@ -271,18 +271,7 @@ object ScaleUp {
       }
     }
     val only = args.lift(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harness default (see Verify): budget-sized rank prunes
-      // rewrite to WindowGroupLimits without in-builder conf writes
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        operators.Pipeline.TokenBudget.toString)
-      .getOrCreate()
+    val spark = Harness.session("graft-scaleup")
     spark.sparkContext.setLogLevel("WARN")
 
     confs.foreach { case (ck, cv) => spark.conf.set(ck, cv) }

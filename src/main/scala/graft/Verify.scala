@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,18 +16,7 @@ object Verify {
       if (args.length == 3) { val pats = args(2).split(",").toSeq
         (n: String) => pats.exists(n.contains)
       } else (_: String) => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // rank-literal prunes up to p09's token budget rewrite to
-      // map-side WindowGroupLimits (semantics-preserving; harness
-      // default so no QueryDef has to mutate session conf)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold",
-        operators.Pipeline.TokenBudget.toString)
-      .getOrCreate()
+    val spark = Harness.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryDef, Tables}
+import graft.TopK.topKPerKey
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -856,11 +857,8 @@ object Analytics {
     QueryDef(
       "q66_latest_per_key",
       (s, d) => {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        tb(s, d).events
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+        topKPerKey(tb(s, d).events, Seq(col("user_id")),
+            Seq(col("ts").desc, col("event_id").desc), 1, "rn")
           .select(col("user_id"), col("event_id"), col("event_type"),
             col("value"))
           .orderBy(col("user_id"))

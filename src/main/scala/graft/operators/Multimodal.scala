@@ -503,7 +503,7 @@ object Multimodal {
     // ×100 luck tail, SHED at the mechanism. The r19 band probe
     // root-caused the tail to hamming-space crowding by short-doc
     // signatures; the documented "wider grid" escape was then probed
-    // (M08WideGridProbe) and REFUTED: 95% of the ×100 media stripe is
+    // (PLANS.md r19 item 7) and REFUTED: 95% of the ×100 media stripe is
     // sub-grid (fewer payload blocks than grid positions), a wider
     // grid leaves every sub-grid signature bit-identical while its
     // coupled hamming threshold LOOSENS (bands−1 = 3 at 120 bits) —
@@ -940,7 +940,7 @@ object Multimodal {
     * (one md5 bit per block; empty grid positions carry none), so
     * between sub-floor docs hamming proximity is EXPECTED by chance
     * once ~n²/2 pairs sample a 2^nb space — the measured ×100
-    * mechanism (M08WideGridProbe: grid-FILLING docs produced zero
+    * mechanism (PLANS.md r19 item 7: grid-FILLING docs produced zero
     * luck pairs; widening the grid changed no sub-grid signature and
     * only loosened the threshold). Same occupancy discipline as
     * [[Dedup.adaptiveSimHashBands]], one level up: bands size the

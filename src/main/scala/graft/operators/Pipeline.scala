@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.TopK.topKPerKey
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.{shim => graftshim}
@@ -391,11 +392,8 @@ object Pipeline {
           .select(col("vec_id"), col("cid"),
             md5(concat(lit("p05:"), col("vec_id").cast("string")))
               .as("gate"))
-        val wPick = Window.partitionBy(col("cid"))
-          .orderBy(col("gate"), col("vec_id"))
-        assigned
-          .withColumn("pick_rank", row_number().over(wPick))
-          .filter(col("pick_rank") <= 16)
+        topKPerKey(assigned, Seq(col("cid")),
+            Seq(col("gate"), col("vec_id")), 16, "pick_rank")
           .select(col("cid"), col("pick_rank").cast("long").as("pick_rank"),
             col("vec_id"))
           .orderBy(col("cid"), col("pick_rank"))
@@ -492,7 +490,7 @@ object Pipeline {
         // the rank prune only rewrites to a WindowGroupLimit when the
         // literal is at or below the optimizer threshold (default
         // 1000) — the HARNESS session defaults raise it to
-        // [[TokenBudget]] (Verify/Bench/ScaleUp/SparkSpec builders;
+        // [[TokenBudget]] ([[graft.Harness.session]];
         // CONFIGURATION.md "Token-budget mixtures"). The builder
         // itself never mutates session conf (a r17 ADVICE item: a
         // silent in-builder set leaked an altered optimizer threshold

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Exact, QueryDef, Tables}
+import graft.TopK.topKPerKey
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -207,11 +208,8 @@ object Relational {
     QueryDef(
       "q08_window_topn_per_customer",
       (s, d) => {
-        val w = Window.partitionBy(col("o_custkey"))
-          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        tb(s, d).orders
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
+        topKPerKey(tb(s, d).orders, Seq(col("o_custkey")),
+            Seq(col("o_totalprice").desc, col("o_orderkey")), 3, "rn")
           .select(col("o_custkey"), col("rn"), col("o_orderkey"),
             col("o_totalprice"))
           .orderBy(col("o_custkey"), col("rn"))

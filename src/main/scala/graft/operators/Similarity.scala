@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftConf, QueryDef, Tables}
+import graft.TopK.topKPerKey
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -790,12 +791,9 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("v").as("av"),
         col("nrm").as("nrm_q"), col("bucket"))
       .withColumn("probe", explode(expr(probeExpr(lshHyperplanes(s, d)))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("c_id"))
-    qs.join(corpus, col("probe") === col("bucket_c"))
-      .withColumn("cos_sim", expr(dotExpr) / (col("nrm_q") * col("nrm_c")))
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") === 1)
+    topKPerKey(qs.join(corpus, col("probe") === col("bucket_c"))
+        .withColumn("cos_sim", expr(dotExpr) / (col("nrm_q") * col("nrm_c"))),
+        Seq(col("q_id")), Seq(col("cos_sim").desc, col("c_id")), 1, "r")
       .select(col("q_id"), col("c_id"), col("cos_sim"))
       .orderBy(col("q_id"))
   }
@@ -1910,29 +1908,23 @@ object Similarity {
       .select(Seq(col("q_id"), col("cid"), col("cd"), col("c_id"),
         col("code0"), col("code1"), col("code2"), col("code3")) ++
         attrCols: _*)
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist"), col("c_id"))
     // candGate filters the ADC-scored candidate set BEFORE the
     // shortlist rank (s19: predicate-constrained search) — the rank
     // is then over ELIGIBLE candidates only, so the shortlist depth
     // buys matching candidates instead of being eaten by filtered-out
     // ones (the post-filter-the-candidates shape of filtered ANN)
-    val shortlist = candGate(
-        adcScore(cand, pqQlutWith(qs, idx.codebook), idx.clut))
-      .withColumn("r", row_number().over(wTop))
-      .filter(col("r") <= idx.sl)
+    val shortlist = topKPerKey(candGate(
+        adcScore(cand, pqQlutWith(qs, idx.codebook), idx.clut)),
+        Seq(col("q_id")), Seq(col("adist"), col("c_id")), idx.sl, "r")
       .select(col("q_id"), col("c_id"))
     // stage 2: EXACT L2 rerank of the ADC shortlist only — native
     // codegen'd fold (identical arithmetic to the HOF it replaces)
     val l2 = "vec_l2sq(av, bv)"
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("l2sq"), col("c_id"))
-    shortlist
-      .join(qs.select(col("q_id"), col("av")), "q_id")
-      .join(corpus.select(col("c_id"), col("bv")), "c_id")
-      .withColumn("l2sq", expr(l2))
-      .withColumn("r", row_number().over(wF))
-      .filter(col("r") <= topK)
+    topKPerKey(shortlist
+        .join(qs.select(col("q_id"), col("av")), "q_id")
+        .join(corpus.select(col("c_id"), col("bv")), "c_id")
+        .withColumn("l2sq", expr(l2)),
+        Seq(col("q_id")), Seq(col("l2sq"), col("c_id")), topK, "r")
       .select(col("q_id"), col("r"), col("c_id"), col("l2sq"))
   }
 
@@ -2668,12 +2660,10 @@ object Similarity {
       .crossJoin(broadcast(stats))
       .select(col("q_id"), col("doc_id"),
         bm25Contrib(col("nd"), col("tl")).as("c"))
-    val wLex = Window.partitionBy(col("q_id"))
-      .orderBy(col("lex_scaled").desc, col("doc_id"))
-    scored.groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("c")).as("lex_scaled"))
-      .withColumn("rank", row_number().over(wLex))
-      .filter(col("rank") <= 10)
+    topKPerKey(scored.groupBy(col("q_id"), col("doc_id"))
+        .agg(sum(col("c")).as("lex_scaled")),
+        Seq(col("q_id")), Seq(col("lex_scaled").desc, col("doc_id")), 10,
+        "rank")
       .select(col("q_id"), col("doc_id"), col("rank"))
   }
 
@@ -3169,12 +3159,10 @@ object Similarity {
       .join(lex.dl, Seq("doc_id"))
       .select(col("q_id"), col("doc_id"),
         bm25Contrib(lit(lex.nd), lit(lex.tl)).as("c"))
-    val wLex = Window.partitionBy(col("q_id"))
-      .orderBy(col("lex_scaled").desc, col("doc_id"))
-    scored.groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("c")).as("lex_scaled"))
-      .withColumn("rank", row_number().over(wLex))
-      .filter(col("rank") <= 10)
+    topKPerKey(scored.groupBy(col("q_id"), col("doc_id"))
+        .agg(sum(col("c")).as("lex_scaled")),
+        Seq(col("q_id")), Seq(col("lex_scaled").desc, col("doc_id")), 10,
+        "rank")
       .select(col("q_id"), col("doc_id"), col("rank"))
   }
 
@@ -3206,10 +3194,8 @@ object Similarity {
         rrfTerm.as("c")))
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("c")).as("rrf_scaled"))
-    val wF = Window.partitionBy(col("q_id"))
-      .orderBy(col("rrf_scaled").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= 3)
+    topKPerKey(fused, Seq(col("q_id")),
+        Seq(col("rrf_scaled").desc, col("doc_id")), 3, "rank")
       .select(col("q_id"), col("rank"), col("doc_id"),
         col("rrf_scaled"))
       .orderBy(col("q_id"), col("rank"))
@@ -3450,10 +3436,8 @@ object Similarity {
         """aggregate(zip_with(v, c, (x, w) -> x * w),
            cast(0.0 as double), (acc, x) -> acc + x)""")
         / (col("nrm") * col("cnrm")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cs").desc, col("cid"))
-    aff.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    topKPerKey(aff, Seq(col("vec_id")), Seq(col("cs").desc, col("cid")), 1,
+        "rn")
       .select(col("vec_id"), col("cid"), col("cs"))
   }
 
@@ -3533,10 +3517,8 @@ object Similarity {
             col("nrm").as("nrm_b")))
           .filter(col("id_a") =!= col("id_b"))
           .withColumn("cos_sim", expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-        val w = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos_sim").desc, col("id_b"))
-        pairs.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 3)
+        topKPerKey(pairs, Seq(col("id_a")),
+            Seq(col("cos_sim").desc, col("id_b")), 3, "rank")
           .select(col("id_a"), col("rank"), col("id_b"), col("cos_sim"))
           .orderBy(col("id_a"), col("rank"))
       },
@@ -3572,10 +3554,8 @@ object Similarity {
             col("probe") === col("bucket_b"))
           .filter(col("id_a") =!= col("id_b"))
           .withColumn("cos_sim", expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-        val w = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos_sim").desc, col("id_b"))
-        pairs.withColumn("rank", row_number().over(w))
-          .filter(col("rank") === 1)
+        topKPerKey(pairs, Seq(col("id_a")),
+            Seq(col("cos_sim").desc, col("id_b")), 1, "rank")
           .select(col("id_a"), col("bucket"), col("id_b"), col("cos_sim"))
           .orderBy(col("id_a"))
       },
@@ -3634,12 +3614,11 @@ object Similarity {
         val affinity = e.crossJoin(broadcast(cents))
           .withColumn("cs",
             expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
-        val wAssign = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cs").desc, col("cid"))
-        val ranked = affinity.withColumn("rn", row_number().over(wAssign))
-        val assigned = ranked.filter(col("rn") === 1)
+        def nearest(k: Int) = topKPerKey(affinity, Seq(col("vec_id")),
+          Seq(col("cs").desc, col("cid")), k, "rn")
+        val assigned = nearest(1)
           .select(col("vec_id").as("cand_id"), col("cid").as("assigned_cid"))
-        val probes = ranked.filter(col("rn") <= 2)
+        val probes = nearest(2)
           .select(col("vec_id").as("q_id"), col("cid").as("probe_cid"))
         val cand = probes
           .join(assigned, col("probe_cid") === col("assigned_cid"))
@@ -3651,10 +3630,8 @@ object Similarity {
           .join(e.select(col("vec_id").as("cand_id"), col("v").as("bv"),
             col("nrm").as("nrm_b")), "cand_id")
           .withColumn("cos_sim", expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-        val wTop = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("cand_id"))
-        scored.withColumn("rank", row_number().over(wTop))
-          .filter(col("rank") === 1)
+        topKPerKey(scored, Seq(col("q_id")),
+            Seq(col("cos_sim").desc, col("cand_id")), 1, "rank")
           .select(col("q_id"), col("cand_id").as("nn_id"), col("cos_sim"))
           .orderBy(col("q_id"))
       },
@@ -3993,12 +3970,10 @@ object Similarity {
           .select(col("vec_id").as("q_id"), col("v").as("av"),
             col("nrm").as("nrm_q"), col("bucket"))
           .withColumn("probe", explode(expr(probeExpr(lshHyperplanes(s, d)))))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("c_id"))
-        qs.join(corpus, col("probe") === col("bucket_c"))
-          .withColumn("cos_sim", expr(dotExpr) / (col("nrm_q") * col("nrm_c")))
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") === 1)
+        topKPerKey(qs.join(corpus, col("probe") === col("bucket_c"))
+            .withColumn("cos_sim",
+              expr(dotExpr) / (col("nrm_q") * col("nrm_c"))),
+            Seq(col("q_id")), Seq(col("cos_sim").desc, col("c_id")), 1, "r")
           .select(col("q_id"), col("c_id"), col("cos_sim"))
           .orderBy(col("q_id"))
       },
@@ -4178,12 +4153,9 @@ object Similarity {
                (x, y) -> (cast(x as double) - cast(y as double))
                        * (cast(x as double) - cast(y as double))),
              cast(0.0 as double), (acc, x) -> acc + x)"""
-        val wVec = Window.partitionBy(col("q_id"))
-          .orderBy(col("l2"), col("doc_id"))
-        val vecTop = cv.crossJoin(broadcast(qv))
-          .withColumn("l2", expr(l2))
-          .withColumn("rank", row_number().over(wVec))
-          .filter(col("rank") <= 10)
+        val vecTop = topKPerKey(cv.crossJoin(broadcast(qv))
+            .withColumn("l2", expr(l2)),
+            Seq(col("q_id")), Seq(col("l2"), col("doc_id")), 10, "rank")
           .select(col("q_id"), col("doc_id"), col("rank"))
 
         hybridFuse(lexTop, vecTop)
@@ -4334,11 +4306,9 @@ object Similarity {
             e.select((col("vec_id") + lit(1L)).as("q_id"),
               col("v").as("bv")), "q_id")
           .select(col("q_id"), expr(l2).as("pos_l2sq"))
-        val wN = Window.partitionBy(col("q_id")).orderBy(col("r"))
-        servePqRanked(s, qv, cv, idx, identity, 11)
-          .filter(col("c_id") =!= col("q_id") - lit(1L))
-          .withColumn("neg_rank", row_number().over(wN))
-          .filter(col("neg_rank") <= 10)
+        topKPerKey(servePqRanked(s, qv, cv, idx, identity, 11)
+            .filter(col("c_id") =!= col("q_id") - lit(1L)),
+            Seq(col("q_id")), Seq(col("r")), 10, "neg_rank")
           .join(pos, "q_id")
           .select(col("q_id"), col("neg_rank"), col("c_id"),
             col("l2sq"),
@@ -4530,22 +4500,18 @@ object Similarity {
           .filter(col("id_a") =!= col("id_b"))
           .withColumn("cos16",
             expr("vec_dot(a16, b16)") / (col("na16") * col("nb16")))
-        val wC = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos16").desc, col("id_b"))
-        val shortlist = coarse.withColumn("r", row_number().over(wC))
-          .filter(col("r") <= truncShortlist(s)).select(col("id_a"), col("id_b"))
+        val shortlist = topKPerKey(coarse, Seq(col("id_a")),
+            Seq(col("cos16").desc, col("id_b")), truncShortlist(s), "r")
+          .select(col("id_a"), col("id_b"))
         val full = vecs(s, d)
-        val wF = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos_full").desc, col("id_b"))
-        shortlist
-          .join(full.select(col("vec_id").as("id_a"), col("v").as("av"),
-            col("nrm").as("nrm_a")), "id_a")
-          .join(full.select(col("vec_id").as("id_b"), col("v").as("bv"),
-            col("nrm").as("nrm_b")), "id_b")
-          .withColumn("cos_full",
-            expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-          .withColumn("r", row_number().over(wF))
-          .filter(col("r") === 1)
+        topKPerKey(shortlist
+            .join(full.select(col("vec_id").as("id_a"), col("v").as("av"),
+              col("nrm").as("nrm_a")), "id_a")
+            .join(full.select(col("vec_id").as("id_b"), col("v").as("bv"),
+              col("nrm").as("nrm_b")), "id_b")
+            .withColumn("cos_full",
+              expr(dotExpr) / (col("nrm_a") * col("nrm_b"))),
+            Seq(col("id_a")), Seq(col("cos_full").desc, col("id_b")), 1, "r")
           .select(col("id_a"), col("id_b"), col("cos_full"))
           .orderBy(col("id_a"))
       },
@@ -4602,23 +4568,19 @@ object Similarity {
           .filter(col("id_a") =!= col("id_b"))
           .withColumn("cos16",
             expr("vec_dot(a16, b16)") / (col("na16") * col("nb16")))
-        val wC = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos16").desc, col("id_b"))
-        val shortlist = coarse.withColumn("r", row_number().over(wC))
-          .filter(col("r") <= truncShortlist(s)).select(col("id_a"), col("id_b"))
+        val shortlist = topKPerKey(coarse, Seq(col("id_a")),
+            Seq(col("cos16").desc, col("id_b")), truncShortlist(s), "r")
+          .select(col("id_a"), col("id_b"))
         // stage 2: full-dim rerank of the shortlist only
         val full = vecs(s, d)
-        val wF = Window.partitionBy(col("id_a"))
-          .orderBy(col("cos_full").desc, col("id_b"))
-        shortlist
-          .join(full.select(col("vec_id").as("id_a"), col("v").as("av"),
-            col("nrm").as("nrm_a")), "id_a")
-          .join(full.select(col("vec_id").as("id_b"), col("v").as("bv"),
-            col("nrm").as("nrm_b")), "id_b")
-          .withColumn("cos_full",
-            expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-          .withColumn("r", row_number().over(wF))
-          .filter(col("r") === 1)
+        topKPerKey(shortlist
+            .join(full.select(col("vec_id").as("id_a"), col("v").as("av"),
+              col("nrm").as("nrm_a")), "id_a")
+            .join(full.select(col("vec_id").as("id_b"), col("v").as("bv"),
+              col("nrm").as("nrm_b")), "id_b")
+            .withColumn("cos_full",
+              expr(dotExpr) / (col("nrm_a") * col("nrm_b"))),
+            Seq(col("id_a")), Seq(col("cos_full").desc, col("id_b")), 1, "r")
           .select(col("id_a"), col("id_b"), col("cos_full"))
           .orderBy(col("id_a"))
       },
@@ -4721,12 +4683,10 @@ object Similarity {
           .select(col("vec_id").as("q_id"), col("v").as("av"),
             col("nrm").as("nrm_q"), col("bucket"))
           .withColumn("probe", explode(expr(probeExpr(lshHyperplanes(s, d)))))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("c_id"))
-        qs.join(corpus, col("probe") === col("bucket_c"))
-          .withColumn("cos_sim", expr(dotExpr) / (col("nrm_q") * col("nrm_c")))
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") === 1)
+        topKPerKey(qs.join(corpus, col("probe") === col("bucket_c"))
+            .withColumn("cos_sim",
+              expr(dotExpr) / (col("nrm_q") * col("nrm_c"))),
+            Seq(col("q_id")), Seq(col("cos_sim").desc, col("c_id")), 1, "r")
           .select(col("q_id"), col("c_id"), col("cos_sim"))
           .orderBy(col("q_id"))
       },
@@ -4819,17 +4779,14 @@ object Similarity {
         val hamming = (0 until words)
           .map(j => expr(s"bit_count(h${j}_c ^ h${j}_q)"))
           .reduce(_ + _)
-        val wHam = Window.partitionBy(col("q_id"))
-          .orderBy(col("hamming"), col("c_id"))
-        val wCos = Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("c_id"))
-        corpus.crossJoin(broadcast(qs)) // labeled: code scan, 8 q-rows
-          .withColumn("hamming", hamming)
-          .withColumn("hr", row_number().over(wHam))
-          .filter(col("hr") <= shortlist) // code-space shortlist
-          .withColumn("cos_sim", expr(dotExpr) / (col("nrm_q") * col("nrm_c")))
-          .withColumn("rank", row_number().over(wCos))
-          .filter(col("rank") <= 3) // full-precision rerank
+        val codeShortlist = topKPerKey(
+          corpus.crossJoin(broadcast(qs)) // labeled: code scan, 8 q-rows
+            .withColumn("hamming", hamming),
+          Seq(col("q_id")), Seq(col("hamming"), col("c_id")), shortlist, "hr")
+        topKPerKey( // full-precision rerank
+            codeShortlist.withColumn("cos_sim",
+              expr(dotExpr) / (col("nrm_q") * col("nrm_c"))),
+            Seq(col("q_id")), Seq(col("cos_sim").desc, col("c_id")), 3, "rank")
           .select(col("q_id"), col("rank"), col("c_id"), col("hamming"),
             col("cos_sim"))
           .orderBy(col("q_id"), col("rank"))
@@ -4890,11 +4847,8 @@ object Similarity {
             col("nrm").as("nrm_b")))
           .filter(col("qid") =!= col("id_b"))
           .withColumn("cos_q", expr(dotExpr) / (col("nrm_a") * col("nrm_b")))
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("cos_q").desc, col("id_b"))
-        mmrSelect(mmrPack(
-          cand.withColumn("r", row_number().over(w))
-            .filter(col("r") <= MmrCandidates)))
+        mmrSelect(mmrPack(topKPerKey(cand, Seq(col("qid")),
+          Seq(col("cos_q").desc, col("id_b")), MmrCandidates, "r")))
       },
       Some(matCtes(s"""WITH e AS ($vecsSql),
         cand0 AS (SELECT a.vec_id AS qid, b.vec_id AS id_b,

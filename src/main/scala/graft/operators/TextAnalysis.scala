@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftConf, QueryDef, Tables}
+import graft.TopK.topKPerKey
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -208,10 +209,8 @@ object TextAnalysis {
           .join(broadcast(markers), col("tok") === col("marker"))
           .groupBy(col("doc_id"), col("marker_lang"))
           .agg(count(lit(1)).as("votes"))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("votes").desc, col("marker_lang"))
-        val top = votes.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+        val top = topKPerKey(votes, Seq(col("doc_id")),
+            Seq(col("votes").desc, col("marker_lang")), 1, "rn")
           .select(col("doc_id"), col("marker_lang").as("pred_lang"),
             col("votes"))
         docs.select(col("doc_id"), col("lang").as("true_lang"))
@@ -284,12 +283,9 @@ object TextAnalysis {
         val tf = tok.groupBy(col("doc_id"), col("term"))
           .agg(count(lit(1)).as("tf"))
         val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("score").desc, col("term"))
-        tf.join(df, "term")
-          .withColumn("score", col("tf").cast("double") / col("df"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
+        topKPerKey(tf.join(df, "term")
+            .withColumn("score", col("tf").cast("double") / col("df")),
+            Seq(col("doc_id")), Seq(col("score").desc, col("term")), 1, "rn")
           .select(col("doc_id"), col("term"), col("tf"), col("df"),
             col("score"))
           .orderBy(col("doc_id"))
@@ -319,9 +315,8 @@ object TextAnalysis {
         val tok = new Tables(s, d).documents
           .select(explode(expr(toksExpr)).as("term"))
         val counts = tok.groupBy(col("term")).agg(count(lit(1)).as("tf"))
-        val w = Window.orderBy(col("tf").desc, col("term"))
-        val top10 = counts.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
+        val top10 = topKPerKey(counts, Seq(),
+            Seq(col("tf").desc, col("term")), 10, "rn")
           .agg(sum(col("tf")).as("top10_tokens"))
         counts.agg(
             sum(col("tf")).as("total_tokens"),
@@ -758,12 +753,8 @@ object TextAnalysis {
                 * lit(100000000.0)).cast("long").as("c"))
         val perDoc = scored.groupBy(col("query_id"), col("doc_id"))
           .agg(sum(col("c")).as("score_scaled"))
-        perDoc
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("score_scaled").desc, col("doc_id"))))
-          .filter(col("rank") <= 3)
+        topKPerKey(perDoc, Seq(col("query_id")),
+            Seq(col("score_scaled").desc, col("doc_id")), 3, "rank")
           .select(col("query_id"), col("rank"), col("doc_id"),
             (col("score_scaled").cast("double") / lit(100000000.0))
               .as("score"))

@@ -55,4 +55,43 @@ class BenchConfSpec extends AnyFunSuite {
     assert(Bench.parseConf("a.b=1,spark.my-dialed.conf=2") ===
       Seq("a.b" -> "1", "spark.my-dialed.conf" -> "2"))
   }
+
+  // the pin guard: a total only replaces the pin when it was measured
+  // on the pin's own (sf, cpus) — ROADMAP aim 3
+  private val pinLine = """{"metric":"total","value":15.1,"unit":"sec",""" +
+    """"host_loaded":false,"sf":"/data/sf0.1","cpus":32}"""
+  private def out(total: Double, sf: String = "/data/sf0.1",
+      cpus: Int = 32, force: Boolean = false,
+      pin: Option[String] = Some(pinLine)): String =
+    Bench.outFile(pin, total, sf, cpus, partial = false,
+      hostLoaded = false, force = force)
+
+  test("a smaller-SF total never replaces the pin, even when forced") {
+    assert(out(3.2, sf = "/data/sf0.01") === "bench_out.loaded.json")
+    assert(out(3.2, sf = "/data/sf0.01", force = true) ===
+      "bench_out.loaded.json")
+  }
+
+  test("a run on another core count never replaces the pin") {
+    assert(out(9.0, cpus = 4) === "bench_out.loaded.json")
+    assert(out(9.0, cpus = 4, force = true) === "bench_out.loaded.json")
+    // a pin written before cpus was recorded matches no run
+    val legacy = pinLine.replace(""","cpus":32""", "")
+    assert(out(9.0, pin = Some(legacy)) === "bench_out.loaded.json")
+  }
+
+  test("a same-(SF, cpus) faster total replaces the pin; a slower one " +
+      "only when forced; no pin yet takes any quiet run") {
+    assert(out(14.9) === "bench_out.json")
+    assert(out(15.3) === "bench_out.loaded.json")
+    assert(out(15.3, force = true) === "bench_out.json")
+    assert(out(99.0, pin = None) === "bench_out.json")
+  }
+
+  test("partial and loaded runs divert before any pin comparison") {
+    assert(Bench.outFile(Some(pinLine), 1.0, "/data/sf0.1", 32, partial = true,
+      hostLoaded = false, force = true) === "bench_out.partial.json")
+    assert(Bench.outFile(Some(pinLine), 1.0, "/data/sf0.1", 32, partial = false,
+      hostLoaded = true, force = true) === "bench_out.loaded.json")
+  }
 }

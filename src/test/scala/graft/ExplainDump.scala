@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SimpleMode
 
 /** Dev tool: dump physical plans for named queries (PLANS.md source). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val s = Harness.session("graft-explaindump", 4)
     s.sparkContext.setLogLevel("ERROR")
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     args(0).split(",").foreach { n =>

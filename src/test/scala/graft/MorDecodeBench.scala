@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.shim
 
 /** On-demand micro-benchmark of the two per-file decoders behind the
@@ -10,10 +9,7 @@ import org.apache.spark.sql.graftshim.shim
   * `sbt "Test/runMain graft.MorDecodeBench"`. */
 object MorDecodeBench {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    val s = Harness.session("graft-mordecodebench", 4)
     s.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Files.createTempDirectory("morbench").toString
     s.range(0, 2000000).selectExpr("id",

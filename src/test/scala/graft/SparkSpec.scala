@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one per suite, lazily created). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    // harness default (mirrors Verify/Bench/ScaleUp): budget-sized
-    // rank prunes rewrite to WindowGroupLimits; no QueryDef mutates
-    // session conf to get it (TokenBudgetSpec pins this)
-    .config("spark.sql.optimizer.windowGroupLimitThreshold",
-      graft.operators.Pipeline.TokenBudget.toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(getClass.getSimpleName, 4)
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
