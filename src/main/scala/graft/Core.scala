@@ -67,34 +67,11 @@ final class Tables(val spark: SparkSession, dir: String) {
 
 object Tables {
 
-  /** Footer schemas of sniffed parquet paths (immutable driver data —
-    * one footer read per path per JVM). */
-  private val footerCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.parquet.schema.MessageType]()
-
-  private def footerSchema(path: String)
-      : org.apache.parquet.schema.MessageType =
-    footerCache.computeIfAbsent(path, p => {
-      val f = new java.io.File(p)
-      val part =
-        if (f.isDirectory)
-          f.listFiles().filter(x => x.getName.endsWith(".parquet")
-              && !x.getName.startsWith("_") && !x.getName.startsWith("."))
-            .sortBy(_.getName).headOption.getOrElse(
-              throw new IllegalStateException(s"no parquet parts under $p"))
-        else f
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    })
-
   /** Whether `path`'s `ts` column is physically INT64 TIMESTAMP with
     * NANOS precision (the encoding Spark 4 refuses to infer). */
   private[graft] def tsIsNanos(path: String): Boolean = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val sch = footerSchema(path)
+    val sch = CorpusStats.footerSchema(path)
     sch.containsField("ts") && (sch.getType(Seq("ts"): _*) match {
       case pt: org.apache.parquet.schema.PrimitiveType =>
         pt.getLogicalTypeAnnotation match {
@@ -116,7 +93,7 @@ object Tables {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    val sch = footerSchema(path)
+    val sch = CorpusStats.footerSchema(path)
     StructType(sch.getFields.asScala.toSeq.map {
       case pt: org.apache.parquet.schema.PrimitiveType =>
         val dt = pt.getPrimitiveTypeName match {
@@ -138,6 +115,85 @@ object Tables {
         throw new IllegalStateException(
           s"nanos-events schema: unexpected group field ${g.getName}")
     })
+  }
+}
+
+/** Statistics of a parquet path — row counts under a predicate and
+  * the footer schema — each valid for exactly the set of files it was
+  * computed from. Adaptive geometry (LSH hyperplanes, IVF cells,
+  * SimHash bands, m09's entropy floor) and the Bernoulli sample
+  * denominators size themselves from these counts, and their DuckDB
+  * twins derive the same values from a live COUNT(*), so a count of a
+  * directory that has since grown would silently diverge from the
+  * twin. Every lookup lists the path once; when the listing changed,
+  * the path's one entry is replaced, so an unchanged path never reruns
+  * a count job and a rewritten one never holds stale statistics. */
+object CorpusStats {
+
+  private final class Entry(path: String,
+      val files: Seq[(String, Long, Long)]) {
+    val counts =
+      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    /** The schema of the first data file by name. */
+    lazy val footer: org.apache.parquet.schema.MessageType =
+      Parquet.withParquetFooter(
+        files.map(_._1).find(_.endsWith(".parquet")).getOrElse(
+          throw new IllegalStateException(s"no parquet parts under $path")))(
+        _.getFooter.getFileMetaData.getSchema)
+  }
+
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  /** Rows of `path` matching `where` — one `count()` job per (file
+    * set, predicate). */
+  def count(s: SparkSession, path: String, where: Column = lit(true)): Long =
+    entry(path).counts.computeIfAbsent(where.toString,
+      _ => s.read.parquet(path).filter(where).count()).longValue()
+
+  def footerSchema(path: String): org.apache.parquet.schema.MessageType =
+    entry(path).footer
+
+  /** Statistics held per path under `root` (test hook). */
+  private[graft] def held(root: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    entries.asScala.collect {
+      case (p, e) if p.startsWith(root) => p -> e.counts.size
+    }.toMap
+  }
+
+  private def entry(path: String): Entry = {
+    val files = listing(path)
+    entries.compute(path, (_, e) =>
+      if (e != null && e.files == files) e else new Entry(path, files))
+  }
+
+  /** (name, size, mtime) of each file under `path` that Spark reads:
+    * `_`/`.` names (commit markers, checksums) skipped. */
+  private def listing(path: String): Seq[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[(String, Long, Long)] =
+      if (f.isDirectory)
+        Option(f.listFiles()).toSeq.flatten
+          .filterNot(x => x.getName.startsWith("_")
+            || x.getName.startsWith("."))
+          .sortBy(_.getName).flatMap(walk)
+      else if (f.isFile) Seq((f.getPath, f.length, f.lastModified))
+      else Seq.empty
+    walk(new java.io.File(path))
+  }
+}
+
+object Parquet {
+
+  /** Opens one parquet file's footer (no data pages read), applies
+    * `f` to the reader and closes it. */
+  def withParquetFooter[A](path: String)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        new org.apache.hadoop.conf.Configuration()))
+    try f(r) finally r.close()
   }
 }
 
@@ -351,14 +407,6 @@ object GraftConf {
     * closing the write-skew window at the cost of one predicate scan
     * over the late-arriving files at commit). */
   val RowLevelIsolationKey = "spark.graft.rowLevelIsolation"
-
-  /** Profiling aid (never set in gated runs): multi-phase lifecycle
-    * queries (w19) print per-phase elapsed times to stderr so a
-    * scale probe can attribute wall time to phases instead of
-    * guessing. Off by default; phase prints force intermediate
-    * materialization, so the measured total under this dial is NOT
-    * comparable to a quiet run. */
-  val PhaseLogKey = "spark.graft.phaseLog"
 
   def int(s: SparkSession, key: String, default: Int): Int =
     s.conf.getOption(key).map(_.trim.toInt).getOrElse(default)

@@ -294,13 +294,8 @@ object BronzeBatchAppend {
   }
 
   /** Row count from the parquet footer — no data pages read. */
-  private[catalog] def parquetRowCount(p: java.nio.file.Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
+  private[catalog] def parquetRowCount(p: java.nio.file.Path): Long =
+    graft.Parquet.withParquetFooter(p.toString)(_.getRecordCount)
 
   /** Best-effort recursive delete, tolerant of entries appearing or
     * vanishing mid-walk (concurrent task teardown) — callers retry.

@@ -314,18 +314,13 @@ private[graft] object MorDeletes {
     * otherwise re-open the footer once per (file group × sidecar). */
   def sidecarSchema(path: String): StructType = {
     if (schemaCache.size > 256) schemaCache.clear()
-    schemaCache.computeIfAbsent(path, p => {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
+    schemaCache.computeIfAbsent(path, p =>
+      graft.Parquet.withParquetFooter(p) { r =>
         val meta = r.getFooter.getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata")
         org.apache.spark.sql.types.DataType.fromJson(meta)
           .asInstanceOf[StructType]
-      } finally r.close()
-    })
+      })
   }
 
   // sidecar files are IMMUTABLE once committed (uuid names, atomic

@@ -1044,11 +1044,7 @@ object SnapshotLog {
       parts: Map[String, String]): FileEntry = {
     val p = Paths.get(tableDir, name)
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
+      graft.Parquet.withParquetFooter(p.toString) { r =>
         val md = r.getFooter
         val schema = md.getFileMetaData.getSchema
         val blocks = md.getBlocks.asScala.toSeq
@@ -1107,7 +1103,7 @@ object SnapshotLog {
             ids.get(col.toLowerCase)))
         }.toMap
         FileEntry(name, Some(rows), Some(Files.size(p)), parts, stats)
-      } finally r.close()
+      }
     } catch {
       case _: Throwable => FileEntry(name, parts = parts)
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftConf, QueryDef, Tables}
+import graft.{CorpusStats, GraftConf, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -96,15 +96,10 @@ object Dedup {
       }
     }.getOrElse(1)
 
-  /** One doc count per sf dir per JVM (footer-count scale) feeds the
-    * adaptive geometry — a dedup pass legitimately knows its corpus
-    * size. */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+  /** The doc count feeds the adaptive geometry — a dedup pass
+    * legitimately knows its corpus size. */
   private[graft] def docCount(s: SparkSession, d: String): Long =
-    docCountCache.computeIfAbsent(d,
-      _ => new Tables(s, d).documents.count()).longValue()
+    CorpusStats.count(s, s"$d/documents.parquet")
 
   private def simHashBits(s: SparkSession): Int = {
     val b = GraftConf.int(s, GraftConf.SimHashBitsKey, SimHashBits)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{CorpusStats, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -924,14 +924,10 @@ object Multimodal {
     due
   }
 
-  /** One video-stripe count per (dir, JVM) — feeds the adaptive band
-    * geometry (the [[Dedup.docCount]] discipline). */
-  private val videoCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** The video-stripe count — feeds the adaptive band geometry (the
+    * [[Dedup.docCount]] discipline). */
   private def videoCount(s: SparkSession, d: String): Long =
-    videoCountCache.computeIfAbsent(d,
-      _ => new Tables(s, d).documents
-        .filter(col("doc_id") % 3 === 2).count()).longValue()
+    CorpusStats.count(s, s"$d/documents.parquet", col("doc_id") % 3 === 2)
 
   /** m09's ENTROPY FLOOR: the smallest block count f whose signature
     * space holds the corpus PAIR population at occupancy ≤ 1/4 —
@@ -953,20 +949,15 @@ object Multimodal {
       .map(math.min(_, PHashBits)).getOrElse(PHashBits)
   }
 
-  /** One perceptual-tier count per (dir, JVM): docs at or above the
-    * entropy floor — feeds the tier's OWN band geometry (bucket
-    * occupancy is a property of what enters the banded join, not of
-    * the whole stripe). */
-  private val tierCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** The perceptual-tier count: docs at or above the entropy floor —
+    * feeds the tier's OWN band geometry (bucket occupancy is a
+    * property of what enters the banded join, not of the whole
+    * stripe). */
   private def perceptualTierCount(s: SparkSession, d: String,
       floor: Int): Long =
-    tierCountCache.computeIfAbsent(s"$d#$floor",
-      _ => new Tables(s, d).documents
-        .filter(col("doc_id") % 3 === 2)
-        .filter(greatest(lit(1),
-          expr("cast((length(text) + 15) div 16 as int)")) >= floor)
-        .count()).longValue()
+    CorpusStats.count(s, s"$d/documents.parquet", col("doc_id") % 3 === 2
+      && greatest(lit(1),
+        expr("cast((length(text) + 15) div 16 as int)")) >= floor)
 
   /** The adaptive band geometry as a SQL CTE —
     * [[Dedup.adaptiveSimHashBands]] at [[PHashBits]] bits, thresholds

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftConf, QueryDef, Tables}
+import graft.{CorpusStats, GraftConf, QueryDef, Tables}
 import graft.TopK.topKPerKey
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,15 +55,10 @@ object Similarity {
     math.min(62, math.max(2, bits))
   }
 
-  /** One corpus count per sf dir per JVM (footer-count scale) feeds
-    * the adaptive geometry — an ANN index build legitimately knows
-    * its corpus size. */
-  private val corpusCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+  /** The corpus count feeds the adaptive geometry — an ANN index
+    * build legitimately knows its corpus size. */
   private def corpusCount(s: SparkSession, d: String): Long =
-    corpusCountCache.computeIfAbsent(d,
-      _ => new Tables(s, d).embeddings.count()).longValue()
+    CorpusStats.count(s, s"$d/embeddings.parquet")
 
   private def lshHyperplanes(s: SparkSession, d: String): Int = {
     val h = GraftConf.int(s, GraftConf.LshHyperplanesKey,
@@ -509,34 +504,19 @@ object Similarity {
         t
       }))
 
-  private val evenCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def corpusEvenCount(s: SparkSession, d: String): Long =
-    evenCountCache.computeIfAbsent(d, _ =>
-      new Tables(s, d).embeddings
-        .filter(col("vec_id") % 2 === 0).count()).longValue()
-
-  private val oddCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    CorpusStats.count(s, s"$d/embeddings.parquet", col("vec_id") % 2 === 0)
 
   /** QUERY-side count (odd vec_ids) — the calibration sample's
     * Bernoulli denominator. */
   private def corpusOddCount(s: SparkSession, d: String): Long =
-    oddCountCache.computeIfAbsent(d, _ =>
-      new Tables(s, d).embeddings
-        .filter(col("vec_id") % 2 === 1).count()).longValue()
+    CorpusStats.count(s, s"$d/embeddings.parquet", col("vec_id") % 2 === 1)
 
-  private val docsOddCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Odd-doc count — the hybrid sample's Bernoulli denominator,
-    * cached per (dir, JVM) like the vector counts above so the st19
-    * steady-state micro-batch pays a map lookup, not a count job. */
+  /** Odd-doc count — the hybrid sample's Bernoulli denominator, cached
+    * like the vector counts above so the st19 steady-state
+    * micro-batch pays a listing, not a count job. */
   private def docsOddCount(s: SparkSession, d: String): Long =
-    docsOddCache.computeIfAbsent(d, _ =>
-      new Tables(s, d).documents
-        .filter(col("doc_id") % 2 === 1).count()).longValue()
+    CorpusStats.count(s, s"$d/documents.parquet", col("doc_id") % 2 === 1)
 
   private def ivfCells(s: SparkSession, d: String): Int =
     ivfCellsFor(s, corpusEvenCount(s, d))
@@ -3118,8 +3098,8 @@ object Similarity {
       batch: DataFrame, idx: PqIndex, lex: LexIndex): DataFrame = {
     // the sample threshold derives from the STATIC odd-doc count —
     // batch-independent (every slicing gates the same query set) and
-    // cached per (dir, JVM), so a steady-state micro-batch pays a
-    // map lookup, not a count job
+    // cached per file listing, so a steady-state micro-batch pays a
+    // listing, not a count job
     val thresh = (HybridSampleE * 4294967296L - 1L) /
       math.max(1L, docsOddCount(s, d)) + 1L
     val qdocs = batch

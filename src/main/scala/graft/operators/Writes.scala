@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exact, GraftConf, QueryDef, Tables}
+import graft.{Exact, QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -1282,11 +1282,6 @@ object Writes {
       (s, d) => {
         import java.nio.file.{Files, Paths, StandardCopyOption}
         import java.nio.file.attribute.FileTime
-        val phaseT0 = System.nanoTime()
-        def phase(name: String): Unit =
-          if (GraftConf.bool(s, GraftConf.PhaseLogKey, false))
-            System.err.println(f"[w19-phase] $name%-14s " +
-              f"${(System.nanoTime() - phaseT0) / 1e9}%8.2f s")
         val wh = scratch("w19", d)
         val cat = "w19cat_" + Integer.toHexString(d.hashCode)
         s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.BronzeCatalog")
@@ -1299,7 +1294,6 @@ object Writes {
           col("o_orderkey").cast("long").as("k"),
           col("o_totalprice").cast("double").as("p"))
         o.writeTo(s"$cat.db.ledger").append() // v1: the base ledger
-        phase("base_append")
         // stage the two upsert epochs as single mtime-ordered files —
         // the file source replays them as two micro-batches, i.e. two
         // upsert commits, in one AvailableNow run
@@ -1349,7 +1343,6 @@ object Writes {
             .unionAll(o.filter(col("k") % 17 === 0)
               .select((col("k") + 30000000L).as("k"), col("p"))),
           "01", 1060000L)
-        phase("stage_epochs")
         val ckpt = Paths.get(scratch("w19ckpt", d))
         deleteRec(ckpt) // fresh checkpoint: reruns replay both epochs
         val q = s.readStream.schema("k BIGINT, p DOUBLE")
@@ -1361,7 +1354,6 @@ object Writes {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(s"$cat.db.ledger")
         q.awaitTermination()
-        phase("upsert_stream")
         def stats(ref: String, df: org.apache.spark.sql.DataFrame) =
           df.agg(count(lit(1)).as("n_rows"),
             Exact.dsum(col("p"), 2).as("total"))
@@ -1399,14 +1391,7 @@ object Writes {
             .union(cdcNet)
             .union(proof)
         // v4: purge the equality deletes; answers must not move
-        if (GraftConf.bool(s, GraftConf.PhaseLogKey, false)) {
-          // profiling only: force the versioned scans here so the
-          // phase split separates them from OPTIMIZE + final stats
-          preOpt.write.mode("overwrite").format("noop").save()
-          phase("versioned_scans")
-        }
         bc.optimizeTable(Seq("db"), "ledger", 1L << 30)
-        phase("optimize")
         preOpt
           .union(stats("v4_optimized", s.table(s"$cat.db.ledger")))
           .orderBy(col("ref"))

@@ -32,6 +32,26 @@ class NanosEncodingSpec extends SparkSpec {
       "events accessor mutated the session conf")
   }
 
+  test("a nanos events file rewritten as micros reads as micros") {
+    import spark.implicits._
+    val sfDir = tmpDir("nanos_rewrite_sf")
+    val path = s"$sfDir/events.parquet"
+    NanosProbe.writeNanosEvents(path, Seq(
+      (1L, 1500000000000000000L + 1500L, 10L, "click", 1.0, "{}")))
+    assert(new Tables(spark, sfDir).events.selectExpr("CAST(ts AS STRING)")
+      .head().getString(0) == "2017-07-14 02:40:00.000001")
+    // the same path rewritten by Spark: TIMESTAMP_NTZ is INT64 micros
+    Seq((2L, java.time.LocalDateTime.parse("2020-01-02T03:04:05.123456"),
+        11L, "view", 2.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(path)
+    val rows = new Tables(spark, sfDir).events
+      .selectExpr("event_id", "CAST(ts AS STRING)").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(rows.toSeq == Seq((2L, "2020-01-02 03:04:05.123456")),
+      rows.mkString(", "))
+  }
+
   test("micros/NTZ-encoded events read without touching the session conf") {
     val before = spark.conf.getOption(LegacyKey)
     val df = new Tables(spark, "/root/testdata/sf0.001").events
