@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -170,7 +172,7 @@ object CorpusStats {
 
   /** (name, size, mtime) of each file under `path` that Spark reads:
     * `_`/`.` names (commit markers, checksums) skipped. */
-  private def listing(path: String): Seq[(String, Long, Long)] = {
+  private[graft] def listing(path: String): Seq[(String, Long, Long)] = {
     def walk(f: java.io.File): Seq[(String, Long, Long)] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten
@@ -183,7 +185,95 @@ object CorpusStats {
   }
 }
 
+/** On-disk data derived from source files (the staged streams, the k*
+  * sim-broker, the ×K corpora and the probes' rewrites of them) as a
+  * deterministic function of those files. A derived directory carries
+  * a stamp: its version plus the [[CorpusStats]] listing (path, size,
+  * mtime) of every source. It is reused only while the stamp matches;
+  * otherwise it is built in a sibling directory, the stamp is written
+  * last, and the whole directory is renamed into place. A reader never
+  * sees a half-written or stale directory, and a killed build leaves
+  * nothing at `out` that a later call accepts. */
+object Derived {
+
+  private val StampFile = "_STAMP"
+
+  /** `out`, holding what `build` writes into the empty directory it is
+    * given, for the current files of `sources`. */
+  def dir(out: String, version: String, sources: Seq[String])(
+      build: String => Unit): String = synchronized {
+    val target = Paths.get(out).toAbsolutePath
+    val want = stamp(version, sources)
+    if (stampOf(target).contains(want)) return out
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempDirectory(target.getParent,
+      s"${target.getFileName}.tmp-")
+    try {
+      build(tmp.toString)
+      Files.writeString(tmp.resolve(StampFile), want)
+      // another process may have published the same stamp meanwhile
+      if (!stampOf(target).contains(want)) {
+        if (Files.exists(target)) {
+          val old = tmp.resolveSibling(s"${tmp.getFileName}.old")
+          Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
+          LocalFs.deleteTree(old)
+        }
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      }
+    } finally LocalFs.deleteTree(tmp)
+    out
+  }
+
+  /** `<java.io.tmpdir>/<prefix><md5 of key>`: where a fixture derived
+    * from the sources named by `key` lives. */
+  def under(prefix: String, key: String): String = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"${System.getProperty("java.io.tmpdir")}/$prefix${hex.take(12)}"
+  }
+
+  private def stamp(version: String, sources: Seq[String]): String =
+    (version +: sources.flatMap(CorpusStats.listing).map {
+      case (p, size, mtime) => s"$p\t$size\t$mtime"
+    }).mkString("", "\n", "\n")
+
+  private def stampOf(dir: Path): Option[String] =
+    try Some(Files.readString(dir.resolve(StampFile)))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+}
+
+object LocalFs {
+
+  /** Deletes `root` and everything under it, children first; nothing
+    * happens when `root` is absent. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
+}
+
 object Parquet {
+
+  /** Writes `df` (one partition, so one part file) as the single
+    * parquet file `file` with modification time `mtime`; the file
+    * stream source replays a directory's files in mtime order. */
+  def writeSingleFile(df: DataFrame, file: Path, mtime: Long): Unit = {
+    val tmp = file.resolveSibling(s"_tmp_${file.getFileName}")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val part = {
+      val st = Files.list(tmp)
+      try st.filter(_.getFileName.toString.startsWith("part-"))
+        .findFirst().get()
+      finally st.close()
+    }
+    Files.move(part, file, StandardCopyOption.REPLACE_EXISTING)
+    LocalFs.deleteTree(tmp)
+    Files.setLastModifiedTime(file,
+      java.nio.file.attribute.FileTime.fromMillis(mtime))
+  }
 
   /** Opens one parquet file's footer (no data pages read), applies
     * `f` to the reader and closes it. */

@@ -36,42 +36,40 @@ object RecallProbe {
   private val VecDim = 64
 
   /** Rewrite `srcDir/embeddings.parquet` into `dstDir` as a C-mode
-    * mixture: vector = modeDir(md5(vec_id)%C) + NoiseAmp·noise. */
+    * mixture: vector = modeDir(md5(vec_id)%C) + NoiseAmp·noise; a
+    * [[Derived]] directory of that source file. */
   private def buildClustered(spark: SparkSession, srcDir: String,
-      dstDir: String): Unit = {
-    val marker = java.nio.file.Paths.get(dstDir, "_COMPLETE")
-    val stamp = s"$srcDir|$Modes|$NoiseAmp|v1"
-    if (java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker) == stamp) return
-    // mode directions as a broadcast lookup table built on the driver
-    val modeRows = (0 until Modes).map { m =>
-      (m.toLong, (0 until VecDim).map { dd =>
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"mode:$m:$dd".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        java.lang.Long.parseLong(hex.take(8), 16).toDouble /
-          4294967296.0 - 0.5
-      })
+      dstDir: String): Unit =
+    Derived.dir(dstDir, s"clustered|$Modes|$NoiseAmp|v1",
+        Seq(s"$srcDir/embeddings.parquet")) { out =>
+      // mode directions as a broadcast lookup table built on the driver
+      val modeRows = (0 until Modes).map { m =>
+        (m.toLong, (0 until VecDim).map { dd =>
+          val hex = java.security.MessageDigest.getInstance("MD5")
+            .digest(s"mode:$m:$dd".getBytes("UTF-8"))
+            .map("%02x".format(_)).mkString
+          java.lang.Long.parseLong(hex.take(8), 16).toDouble /
+            4294967296.0 - 0.5
+        })
+      }
+      val modeDf = spark.createDataFrame(modeRows).toDF("mode", "mv")
+      val withMode = spark.read.parquet(s"$srcDir/embeddings.parquet")
+        .withColumn("mode",
+          conv(substring(md5(concat(lit("cm:"),
+            col("vec_id").cast("string"))), 1, 8), 16, 10).cast("long")
+            % Modes)
+        .join(broadcast(modeDf), "mode")
+      val noisy = array((0 until VecDim).map { dd =>
+        element_at(col("mv"), dd + 1) +
+          (conv(substring(md5(concat(col("vec_id").cast("string"),
+            lit(s"~$dd"))), 1, 8), 16, 10).cast("double")
+            / lit(4294967296.0) - lit(0.5)) * lit(NoiseAmp)
+      }: _*).cast("array<float>")
+      withMode
+        .select(col("vec_id"), noisy.as("embedding"), col("label"))
+        .repartition(32)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     }
-    val modeDf = spark.createDataFrame(modeRows).toDF("mode", "mv")
-    val withMode = spark.read.parquet(s"$srcDir/embeddings.parquet")
-      .withColumn("mode",
-        conv(substring(md5(concat(lit("cm:"),
-          col("vec_id").cast("string"))), 1, 8), 16, 10).cast("long")
-          % Modes)
-      .join(broadcast(modeDf), "mode")
-    val noisy = array((0 until VecDim).map { dd =>
-      element_at(col("mv"), dd + 1) +
-        (conv(substring(md5(concat(col("vec_id").cast("string"),
-          lit(s"~$dd"))), 1, 8), 16, 10).cast("double")
-          / lit(4294967296.0) - lit(0.5)) * lit(NoiseAmp)
-    }: _*).cast("array<float>")
-    withMode
-      .select(col("vec_id"), noisy.as("embedding"), col("label"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dstDir/embeddings.parquet")
-    java.nio.file.Files.writeString(marker, stamp)
-  }
 
   /** Exact top-1 for an E[RefereeSample] md5-gated query sample, via
     * the codegen'd vec identities (fast path; not oracle-twinned). */

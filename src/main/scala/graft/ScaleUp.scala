@@ -543,19 +543,20 @@ object ScaleUp {
       merged.mkString("[", ",\n", "]\n"))
   }
 
-  /** Write the ×K isometric corpus (documents + embeddings) to
-    * `outDir`, skipping the build when it already exists with a
-    * completion marker for this (sfDir, K). */
+  /** Write the ×K isometric corpus to `outDir`, a [[Derived]]
+    * directory of the six source tables it reads: reused while they
+    * are unchanged, rebuilt whole when any of them changes. */
   def build(spark: SparkSession, sfDir: String, outDir: String,
-      k: Int): Unit = {
-    val marker = java.nio.file.Paths.get(outDir, "_COMPLETE")
+      k: Int): Unit =
     // v4: corpus also carries ×K lineitem + part (the q82 PageRank
     // probe — K disjoint copies of the co-purchase graph); v3 added
     // ×K events (st02); v2 added ×K orders (w19)
-    val stamp = s"$sfDir|$k|v4|${graft.streaming.StreamingOps
-      .sourceFingerprint(sfDir)}"
-    if (java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker) == stamp) return
+    Derived.dir(outDir, s"x$k|v4", Seq("documents", "embeddings",
+        "orders", "events", "lineitem", "part")
+      .map(t => s"$sfDir/$t.parquet"))(buildInto(spark, sfDir, _, k))
+
+  private def buildInto(spark: SparkSession, sfDir: String, outDir: String,
+      k: Int): Unit = {
     val t = new Tables(spark, sfDir)
     val copies = spark.range(0, k).toDF("c")
 
@@ -668,7 +669,5 @@ object ScaleUp {
         t.part.columns.filter(_ != "p_partkey").map(col): _*)
     partK.repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/part.parquet")
-
-    java.nio.file.Files.writeString(marker, stamp)
   }
 }

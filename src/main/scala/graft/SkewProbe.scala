@@ -46,31 +46,29 @@ object SkewProbe {
     }
 
   /** Rewrite `srcDir/embeddings.parquet` into `dstDir` with ModePct%
-    * of vectors collapsed onto the mode (+0.1·noise). */
+    * of vectors collapsed onto the mode (+0.1·noise); a [[Derived]]
+    * directory of that source file. */
   private def buildSkew(spark: SparkSession, srcDir: String,
-      dstDir: String): Unit = {
-    val marker = java.nio.file.Paths.get(dstDir, "_COMPLETE")
-    val stamp = s"$srcDir|$ModePct|v1"
-    if (java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker) == stamp) return
-    val m = modeDir
-    val inMode =
-      (conv(substring(md5(concat(lit("skew:"),
-        col("vec_id").cast("string"))), 1, 8), 16, 10).cast("long")
-        % 100) < ModePct
-    val skewed = array((0 until VecDim).map { dd =>
-      lit(m(dd)) + (conv(substring(md5(concat(col("vec_id")
-        .cast("string"), lit(s"#$dd"))), 1, 8), 16, 10).cast("double")
-        / lit(4294967296.0) - lit(0.5)) * lit(0.1)
-    }: _*).cast("array<float>")
-    spark.read.parquet(s"$srcDir/embeddings.parquet")
-      .select(col("vec_id"),
-        when(inMode, skewed).otherwise(col("embedding")).as("embedding"),
-        col("label"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dstDir/embeddings.parquet")
-    java.nio.file.Files.writeString(marker, stamp)
-  }
+      dstDir: String): Unit =
+    Derived.dir(dstDir, s"skew|$ModePct|v1",
+        Seq(s"$srcDir/embeddings.parquet")) { out =>
+      val m = modeDir
+      val inMode =
+        (conv(substring(md5(concat(lit("skew:"),
+          col("vec_id").cast("string"))), 1, 8), 16, 10).cast("long")
+          % 100) < ModePct
+      val skewed = array((0 until VecDim).map { dd =>
+        lit(m(dd)) + (conv(substring(md5(concat(col("vec_id")
+          .cast("string"), lit(s"#$dd"))), 1, 8), 16, 10).cast("double")
+          / lit(4294967296.0) - lit(0.5)) * lit(0.1)
+      }: _*).cast("array<float>")
+      spark.read.parquet(s"$srcDir/embeddings.parquet")
+        .select(col("vec_id"),
+          when(inMode, skewed).otherwise(col("embedding")).as("embedding"),
+          col("label"))
+        .repartition(32)
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -26,14 +26,7 @@ object Verify {
       // stale result behind for the comparer to green-light — a
       // failure must leave nothing (the comparer then reports the
       // query missing instead of silently passing old bytes)
-      val target = java.nio.file.Paths.get(outDir, name)
-      if (Files.exists(target)) {
-        val walk = java.nio.file.Files.walk(target)
-        try walk.sorted(java.util.Comparator
-            .reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
+      LocalFs.deleteTree(Paths.get(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -210,10 +210,10 @@ object BronzeBatchAppend {
         // entries for a moment after the driver sees the failure —
         // retry the sweep briefly so no hidden garbage outlives the
         // failed append
-        deleteTree(stage)
+        deleteStageTree(stage)
         var tries = 0
         while (Files.exists(stage) && tries < 50) {
-          Thread.sleep(100); deleteTree(stage); tries += 1
+          Thread.sleep(100); deleteStageTree(stage); tries += 1
         }
         throw e
     }
@@ -233,7 +233,7 @@ object BronzeBatchAppend {
       Files.move(p, Paths.get(tableDir, s"part-b$batchId-p$i.parquet"),
         StandardCopyOption.ATOMIC_MOVE)
     }
-    deleteTree(stage)
+    deleteStageTree(stage)
     rows
   }
 
@@ -254,9 +254,9 @@ object BronzeBatchAppend {
     val df = stampFieldIds(df0, tableDir)
     val attempt = java.util.UUID.randomUUID().toString.substring(0, 8)
     val stage = Paths.get(tableDir, s".fb-stage-$tag-e$epochId-$attempt")
-    deleteTree(stage)
+    deleteStageTree(stage)
     try df.write.parquet(stage.toString)
-    catch { case e: Throwable => deleteTree(stage); throw e }
+    catch { case e: Throwable => deleteStageTree(stage); throw e }
     val parts = {
       val s = Files.list(stage)
       try {
@@ -285,7 +285,7 @@ object BronzeBatchAppend {
       Files.move(p, Paths.get(tableDir, dest),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    deleteTree(stage)
+    deleteStageTree(stage)
     // fan-out targets bronze catalog tables (snapshot-logged) but the
     // helper also serves plain dirs — commit only where a log exists.
     SnapshotLog.commitIfEnabled(tableDir, "foreach-batch-append") { parent =>
@@ -299,21 +299,10 @@ object BronzeBatchAppend {
 
   /** Best-effort recursive delete, tolerant of entries appearing or
     * vanishing mid-walk (concurrent task teardown) — callers retry.
-    * Shared by the catalog's stage-directory cleanups
-    * ([[deleteStageTree]]). */
+    * Shared by the catalog's stage-directory cleanups. */
   private[catalog] def deleteStageTree(dir: java.nio.file.Path): Unit =
-    deleteTree(dir)
-
-  private def deleteTree(dir: java.nio.file.Path): Unit =
-    if (Files.exists(dir)) {
-      try {
-        val s = Files.walk(dir)
-        try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach { p =>
-            try Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () }
-          }
-        finally s.close()
-      } catch { case _: java.io.IOException => () }
+    try graft.LocalFs.deleteTree(dir)
+    catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
     }
 }

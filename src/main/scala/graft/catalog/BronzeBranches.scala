@@ -142,13 +142,7 @@ object BronzeBranches {
   def dropBranch(tableDir: String, name: String): Boolean = {
     val d = branchDir(tableDir, name)
     if (!Files.isDirectory(d)) false
-    else {
-      val s = Files.walk(d)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-      true
-    }
+    else { graft.LocalFs.deleteTree(d); true }
   }
 
   /** Stage `df` onto the branch: files land in the TABLE dir under

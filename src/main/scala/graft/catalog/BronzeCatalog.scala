@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
@@ -657,17 +656,10 @@ class BronzeCatalog extends TableCatalog with SupportsNamespaces {
     loadTable(ident)
   }
 
-  private def deleteTree(dir: Path): Unit = {
-    val s = Files.walk(dir)
-    try s.sorted(Comparator.reverseOrder[Path]())
-      .forEach(p => Files.delete(p))
-    finally s.close()
-  }
-
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
     if (!isTableDir(dir)) false
-    else { deleteTree(dir); true }
+    else { graft.LocalFs.deleteTree(dir); true }
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
@@ -721,6 +713,6 @@ class BronzeCatalog extends TableCatalog with SupportsNamespaces {
     if (!Files.isDirectory(ns)) false
     else if (!cascade && children(ns).nonEmpty)
       throw new NonEmptyNamespaceException(namespace)
-    else { deleteTree(ns); true }
+    else { graft.LocalFs.deleteTree(ns); true }
   }
 }

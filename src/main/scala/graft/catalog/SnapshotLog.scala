@@ -1277,10 +1277,7 @@ object SnapshotLog {
       }
       Files.move(partFile, Paths.get(tableDir, dest),
         StandardCopyOption.ATOMIC_MOVE)
-      val walk = Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
+      graft.LocalFs.deleteTree(stage)
       dest
     }
     val replaced = toCompact.flatten.toSet
@@ -1441,10 +1438,8 @@ object SnapshotLog {
           .drop("__gz")
           .write.parquet(stage.toString)
         catch { case e: Throwable =>
-          val walk = Files.walk(stage)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-          catch { case _: Throwable => () } finally walk.close()
+          try graft.LocalFs.deleteTree(stage)
+          catch { case _: Throwable => () }
           throw e
         }
         val parts = {
@@ -1466,10 +1461,7 @@ object SnapshotLog {
           if (tuple.nonEmpty) addedParts += dest -> tuple
           groupSeq.foreach(sq => seqHints += dest -> sq)
         }
-        val walk = Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
+        graft.LocalFs.deleteTree(stage)
       } finally cached.unpersist()
     }
     val replaced = snap.files.toSet

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import graft.{QueryDef, Tables}
+import graft.{Derived, QueryDef, Tables}
 import graft.functions.{avro, AvroSchemaConverter}
 import graft.pipeline.BronzeIngest
 import graft.sources.kafkasim.SimBroker
@@ -19,45 +19,41 @@ import org.apache.spark.sql.functions._
   */
 object KafkaOps {
 
-  /** Build (once per sf dir) a sim-broker whose content derives
-    * deterministically from `orders`: partition = o_orderkey % 3,
-    * within-partition order = o_orderkey ascending, value = raw-Avro
-    * OrderEvent(orderId=o_orderkey, amount=o_totalprice,
-    * ts=yyyy-MM-dd of o_orderdate). Offsets are then exactly
-    * rank-within-partition — which the oracle recomputes with
-    * ROW_NUMBER, proving the source's offset bookkeeping. */
-  private def brokerFor(s: SparkSession, dir: String): String = synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // the segment format is part of the key: a broker cached by a build
-    // with another format is rebuilt, never read
-    val root = s"/tmp/graft_broker_v${SimBroker.FormatVersion}_$key"
-    val marker = Paths.get(root, "_COMPLETE")
-    if (Files.exists(marker)) return root
-    val schema = AvroSchemaConverter.parse(avro.OrderEventSchemaJson)
-    val ser = new avro.Serializer(schema)
-    val rows = new Tables(s, dir).orders
-      .select(col("o_orderkey"),
-        col("o_totalprice"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("ts"))
-      .orderBy(col("o_orderkey"))
-      .collect() // driver-side generator for the test broker, not an operator
-    SimBroker.createTopic(root, "orders", 3)
-    (0 until 3).foreach { p =>
-      val recs = rows.iterator
-        .filter(r => (r.getLong(0) % 3).toInt == p)
-        .map { r =>
-          val rec = new GenericData.Record(schema)
-          rec.put("orderId", r.getLong(0).toString)
-          rec.put("amount", java.lang.Double.valueOf(r.getDouble(1)))
-          rec.put("ts", r.getString(2))
-          (None: Option[Array[Byte]], ser.serialize(rec), 0L)
-        }.toSeq
-      SimBroker.append(root, "orders", p, recs)
+  /** A sim-broker whose content derives deterministically from
+    * `orders`: partition = o_orderkey % 3, within-partition order =
+    * o_orderkey ascending, value = raw-Avro OrderEvent(orderId =
+    * o_orderkey, amount = o_totalprice, ts = yyyy-MM-dd of
+    * o_orderdate). Offsets are then exactly rank-within-partition —
+    * which the oracle recomputes with ROW_NUMBER, proving the source's
+    * offset bookkeeping. The broker is a [[graft.Derived]] directory:
+    * built once per `orders.parquet` file listing and segment format,
+    * rebuilt when either changes, and published whole. */
+  private def brokerFor(s: SparkSession, dir: String): String =
+    Derived.dir(Derived.under("graft_broker_", dir),
+        s"simbroker-v${SimBroker.FormatVersion}",
+        Seq(s"$dir/orders.parquet")) { root =>
+      val schema = AvroSchemaConverter.parse(avro.OrderEventSchemaJson)
+      val ser = new avro.Serializer(schema)
+      val rows = new Tables(s, dir).orders
+        .select(col("o_orderkey"),
+          col("o_totalprice"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd").as("ts"))
+        .orderBy(col("o_orderkey"))
+        .collect() // driver-side generator for the test broker, not an operator
+      SimBroker.createTopic(root, "orders", 3)
+      (0 until 3).foreach { p =>
+        val recs = rows.iterator
+          .filter(r => (r.getLong(0) % 3).toInt == p)
+          .map { r =>
+            val rec = new GenericData.Record(schema)
+            rec.put("orderId", r.getLong(0).toString)
+            rec.put("amount", java.lang.Double.valueOf(r.getDouble(1)))
+            rec.put("ts", r.getString(2))
+            (None: Option[Array[Byte]], ser.serialize(rec), 0L)
+          }.toSeq
+        SimBroker.append(root, "orders", p, recs)
+      }
     }
-    Files.createFile(marker)
-    root
-  }
 
   private def decodedWire(s: SparkSession, root: String): DataFrame = {
     avro.registerAvroDecode(s)

@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.nio.file.Paths
+
 import graft.{CorpusStats, GraftConf, QueryDef, Tables}
+import graft.LocalFs.deleteTree
 import graft.TopK.topKPerKey
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -656,22 +659,12 @@ object Similarity {
     s"${System.getProperty("java.io.tmpdir")}/graft_s17-" +
       Integer.toHexString(d.hashCode)
 
-  private def deleteDir(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
-
   private[graft] def s17BuildBase(s: SparkSession, d: String): Unit = {
     // idempotent across lifecycles: clear any compaction generation a
     // previous run left behind (the live table may point at one)
     s.sql("DROP TABLE IF EXISTS s17_corpus_idx")
-    deleteDir(s"${s17IndexPath(d)}-a")
-    deleteDir(s"${s17IndexPath(d)}-b")
+    deleteTree(Paths.get(s"${s17IndexPath(d)}-a"))
+    deleteTree(Paths.get(s"${s17IndexPath(d)}-b"))
     val e = vecs(s, d).withColumn("bucket", expr(bucketExpr))
     // last night's index: the even stripe minus today's arrivals
     e.filter(col("vec_id") % 2 === 0 && col("vec_id") % 10 =!= 0)
@@ -745,7 +738,7 @@ object Similarity {
     } finally s.conf.set(scanKey, prev)
     s.sql("DROP TABLE s17_corpus_idx")
     s.sql("ALTER TABLE s17_corpus_idx_next RENAME TO s17_corpus_idx")
-    deleteDir(curLoc.getPath)
+    deleteTree(Paths.get(curLoc.getPath))
   }
 
   /** Nightly maintenance: bucket ONLY the delta and append through
@@ -1665,7 +1658,7 @@ object Similarity {
     // files (see swapCompact's Scaladoc): a crash in between leaves
     // the old generation readable for any cache still holding it
     bumpPqGen(s, d)
-    deleteDir(superseded)
+    deleteTree(Paths.get(superseded))
   }
 
   /** Rewrite `s18_pq_meta` with gen+1, all other fields verbatim —
@@ -1972,7 +1965,8 @@ object Similarity {
     val codesBase =
       s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_codes-" +
         Integer.toHexString(d.hashCode)
-    deleteDir(s"$codesBase-a"); deleteDir(s"$codesBase-b")
+    deleteTree(Paths.get(s"$codesBase-a"))
+    deleteTree(Paths.get(s"$codesBase-b"))
   }
 
   /** Load the persisted index back (s18): dials from the meta table,
@@ -2730,7 +2724,8 @@ object Similarity {
     // fresh build before the old files disappear (the same ordering
     // [[swapCompact]]'s delete-after-meta contract mandates).
     Seq("s21_lex_post", "s21_lex_dl").foreach { t =>
-      deleteDir(s"${lexPath(d, t)}-a"); deleteDir(s"${lexPath(d, t)}-b")
+      deleteTree(Paths.get(s"${lexPath(d, t)}-a"))
+      deleteTree(Paths.get(s"${lexPath(d, t)}-b"))
     }
   }
 
@@ -2834,7 +2829,7 @@ object Similarity {
     // gen bump BEFORE the superseded dirs go (swapCompact's contract
     // — same crash-window discipline as compactPqCodes)
     bumpLexGen(s, d)
-    superseded.foreach(deleteDir)
+    superseded.foreach(p => deleteTree(Paths.get(p)))
   }
 
   /** Rewrite `s21_lex_meta` with gen+1, all other fields verbatim —
@@ -3009,7 +3004,7 @@ object Similarity {
     s.sql(s"DROP TABLE IF EXISTS $staging")
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(next))) {
       bumpGen()
-      deleteDir(next)
+      deleteTree(Paths.get(next))
     }
     write(s.table(live), next, staging)
     s.sql(s"DROP TABLE $live")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exact, QueryDef, Tables}
+import graft.{Exact, LocalFs, Parquet, QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -1280,8 +1280,7 @@ object Writes {
     QueryDef(
       "w19_equality_upsert",
       (s, d) => {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        import java.nio.file.attribute.FileTime
+        import java.nio.file.{Files, Paths}
         val wh = scratch("w19", d)
         val cat = "w19cat_" + Integer.toHexString(d.hashCode)
         s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.BronzeCatalog")
@@ -1297,38 +1296,19 @@ object Writes {
         // stage the two upsert epochs as single mtime-ordered files —
         // the file source replays them as two micro-batches, i.e. two
         // upsert commits, in one AvailableNow run
-        def deleteRec(p: java.nio.file.Path): Unit = {
-          if (Files.isDirectory(p)) {
-            val st = Files.list(p)
-            try st.forEach(deleteRec(_)) finally st.close()
-          }
-          Files.deleteIfExists(p)
-        }
         val stageDir = Paths.get(scratch("w19stage", d))
-        deleteRec(stageDir)
+        LocalFs.deleteTree(stageDir)
         Files.createDirectories(stageDir)
         def stageEpoch(df: org.apache.spark.sql.DataFrame, name: String,
-            mtime: Long): Unit = {
-          val tmp = stageDir.resolve(s"_tmp_$name")
+            mtime: Long): Unit =
           // repartition(1), NOT coalesce(1): coalesce folds the
           // upstream filter/union into the single writer task, so the
           // whole ×K orders scan runs serial; repartition keeps the
           // scan parallel and only the file write is single-task
           // (one file per epoch is the contract — one micro-batch
           // per upsert commit)
-          df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val st = Files.list(tmp)
-            try st.filter(p =>
-              p.getFileName.toString.startsWith("part-")).findFirst().get()
-            finally st.close()
-          }
-          Files.move(part, stageDir.resolve(s"$name.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-          deleteRec(tmp)
-          Files.setLastModifiedTime(stageDir.resolve(s"$name.parquet"),
-            FileTime.fromMillis(mtime))
-        }
+          Parquet.writeSingleFile(df.repartition(1),
+            stageDir.resolve(s"$name.parquet"), mtime)
         // epoch 1: reprice every 5th key, insert a shifted late feed
         stageEpoch(
           o.filter(col("k") % 5 === 0)
@@ -1344,7 +1324,7 @@ object Writes {
               .select((col("k") + 30000000L).as("k"), col("p"))),
           "01", 1060000L)
         val ckpt = Paths.get(scratch("w19ckpt", d))
-        deleteRec(ckpt) // fresh checkpoint: reruns replay both epochs
+        LocalFs.deleteTree(ckpt) // fresh checkpoint: reruns replay both epochs
         val q = s.readStream.schema("k BIGINT, p DOUBLE")
           .option("maxFilesPerTrigger", 1)
           .parquet(stageDir.toString)

@@ -43,8 +43,8 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 object SimBroker {
 
   /** Version of the on-disk segment format (2: `.log` + `.index`,
-    * staged publish). Caches of built brokers key on it, so a broker
-    * written by an older build is rebuilt rather than misread. */
+    * staged publish). Built brokers carry it in their stamp, so a
+    * broker written by an older build is rebuilt rather than misread. */
   val FormatVersion: Int = 2
 
   /** Records between two index entries: a seek lands at most this many

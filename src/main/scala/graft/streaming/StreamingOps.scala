@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.attribute.FileTime
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{Exact, QueryDef, Tables}
+import graft.{Derived, Exact, Parquet, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,7 +14,10 @@ import org.apache.spark.sql.streaming.Trigger
   * time-ordered parquet files, streamed through the file source one
   * file per micro-batch (so watermarks genuinely advance batch to
   * batch), into a memory sink. Batch SQL over the same rows oracles
-  * the result — the streaming/batch consistency contract.
+  * the result — the streaming/batch consistency contract. The staged
+  * copies (`events`, `documents`, `embeddings`) are [[graft.Derived]]
+  * directories under `java.io.tmpdir`: rebuilt whenever their source
+  * file changes, and published whole.
   *
   * Scale notes: all of these are the shapes that run unchanged on a
   * 1000-executor cluster against Kafka — the stateful aggs shuffle on
@@ -49,168 +52,50 @@ object StreamingOps {
 
   private val counter = new AtomicInteger(0)
 
-  /** Fingerprint of the staged source: every file under
-    * `$dir/events.parquet` (single file or directory) contributes its
-    * path, size, and mtime — so a driver-side testdata regeneration
-    * changes the cache key and forces a restage instead of silently
-    * replaying stale staged files. */
-  private[graft] def sourceFingerprint(dir: String,
-      table: String = "events"): String = {
-    val src = Paths.get(s"$dir/$table.parquet")
-    val parts = scala.collection.mutable.ArrayBuffer[String](dir)
-    def walk(p: Path): Unit =
-      if (Files.isDirectory(p)) {
-        val st = Files.list(p)
-        try st.sorted().forEach(walk(_)) finally st.close()
-      } else if (Files.exists(p)) {
-        parts += s"$p:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
+  /** A table staged for streaming as three single-file parquets,
+    * `00`/`01`/`02.parquet`, its rows ranked by the total order `order`
+    * and split at `cuts(n)` of `n` rows. */
+  private final case class Staging(table: String, prefix: String,
+      frame: Tables => DataFrame, order: Seq[String],
+      cuts: Long => Seq[Long])
+
+  // the last events file carries only the final event
+  private val Events = Staging("events", "graft_stream_", _.events,
+    Seq("ts", "event_id"), n => Seq(n * 2 / 5, n - 1))
+  // the document INGEST stream st14 gates
+  private val Documents = Staging("documents", "graft_docstream_",
+    _.documents, Seq("doc_id"), n => Seq(n / 3, 2 * n / 3))
+  // the QUERY stream st16 serves
+  private val Embeddings = Staging("embeddings", "graft_embstream_",
+    _.embeddings, Seq("vec_id"), n => Seq(n / 3, 2 * n / 3))
+
+  /** The staged copy of `st.table` under `dir`, derived from its source
+    * file (rebuilt when that changes). Modification times increase a
+    * minute per file, so the file source replays them in order. */
+  private def stage(s: SparkSession, dir: String, st: Staging): String =
+    Derived.dir(Derived.under(st.prefix, dir), "v1",
+        Seq(s"$dir/${st.table}.parquet")) { out =>
+      val df = st.frame(new Tables(s, dir))
+      val n = df.count()
+      val ranked = df.withColumn("rn", row_number().over(
+        Window.orderBy(st.order.map(col): _*)) - 1)
+      val bounds = 0L +: st.cuts(n) :+ n
+      bounds.zip(bounds.tail).zipWithIndex.foreach { case ((lo, hi), i) =>
+        Parquet.writeSingleFile(
+          ranked.filter(col("rn") >= lo && col("rn") < hi).drop("rn")
+            .coalesce(1),
+          Paths.get(out, f"$i%02d.parquet"), 1000000L + i * 60000L)
       }
-    walk(src)
-    parts.mkString("|")
-  }
-
-  /** Stage `events` (ts converted ns→µs timestamp) as 3 single-file
-    * parquets split on time order, modification times increasing so the
-    * file source replays them in event-time order. Cached per sf dir,
-    * keyed on the source files' size+mtime so a testdata regen
-    * invalidates the cache. */
-  private def staged(s: SparkSession, dir: String): String = synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(sourceFingerprint(dir).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = Paths.get(s"/tmp/graft_stream_$key")
-    if (Files.exists(root.resolve("_COMPLETE"))) return root.toString
-    Files.createDirectories(root)
-    val ev = new Tables(s, dir).events
-      .orderBy(col("ts"), col("event_id"))
-    val n = ev.count()
-    val cut1 = n * 2 / 5
-    val cut2 = n - 1 // last file carries only the final event
-    val withRn = ev.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))) - 1)
-    Seq((0L, cut1, "00"), (cut1, cut2, "01"), (cut2, n, "02"))
-      .foreach { case (lo, hi, name) =>
-        val part = withRn.filter(col("rn") >= lo && col("rn") < hi).drop("rn")
-        val tmp = root.resolve(s"_tmp_$name")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val file = Files.list(tmp).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(file, root.resolve(s"$name.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        deleteRec(tmp)
-      }
-    // strictly increasing mod-times → deterministic replay order
-    Seq("00", "01", "02").zipWithIndex.foreach { case (f, i) =>
-      Files.setLastModifiedTime(root.resolve(s"$f.parquet"),
-        FileTime.fromMillis(1000000L + i * 60000L))
     }
-    Files.createFile(root.resolve("_COMPLETE"))
-    root.toString
-  }
 
-  private def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(deleteRec) finally s.close()
-    }
-    Files.deleteIfExists(p)
-  }
-
-  /** Stage `documents` as 3 single-file parquets split on doc_id
-    * order — the document INGEST stream st14 gates. Same content-keyed
-    * cache discipline as [[staged]]. */
-  private def stagedDocs(s: SparkSession, dir: String): String = synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(sourceFingerprint(dir, "documents").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = Paths.get(s"/tmp/graft_docstream_$key")
-    if (Files.exists(root.resolve("_COMPLETE"))) return root.toString
-    Files.createDirectories(root)
-    val docs = new Tables(s, dir).documents
-    val n = docs.count()
-    val withRn = docs.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("doc_id"))) - 1)
-    Seq((0L, n / 3, "00"), (n / 3, 2 * n / 3, "01"), (2 * n / 3, n, "02"))
-      .foreach { case (lo, hi, name) =>
-        val part = withRn.filter(col("rn") >= lo && col("rn") < hi).drop("rn")
-        val tmp = root.resolve(s"_tmp_$name")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val file = Files.list(tmp).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(file, root.resolve(s"$name.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        deleteRec(tmp)
-      }
-    Seq("00", "01", "02").zipWithIndex.foreach { case (f, i) =>
-      Files.setLastModifiedTime(root.resolve(s"$f.parquet"),
-        FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    Files.createFile(root.resolve("_COMPLETE"))
-    root.toString
-  }
-
-  /** Stage `embeddings` as 3 single-file parquets split on vec_id
-    * order — the QUERY stream st16 serves. Same content-keyed cache
-    * discipline as [[staged]]/[[stagedDocs]]. */
-  private def stagedEmb(s: SparkSession, dir: String): String = synchronized {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(sourceFingerprint(dir, "embeddings").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = Paths.get(s"/tmp/graft_embstream_$key")
-    if (Files.exists(root.resolve("_COMPLETE"))) return root.toString
-    Files.createDirectories(root)
-    val emb = new Tables(s, dir).embeddings
-    val n = emb.count()
-    val withRn = emb.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("vec_id"))) - 1)
-    Seq((0L, n / 3, "00"), (n / 3, 2 * n / 3, "01"), (2 * n / 3, n, "02"))
-      .foreach { case (lo, hi, name) =>
-        val part = withRn.filter(col("rn") >= lo && col("rn") < hi).drop("rn")
-        val tmp = root.resolve(s"_tmp_$name")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val file = Files.list(tmp).filter(p =>
-          p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(file, root.resolve(s"$name.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        deleteRec(tmp)
-      }
-    Seq("00", "01", "02").zipWithIndex.foreach { case (f, i) =>
-      Files.setLastModifiedTime(root.resolve(s"$f.parquet"),
-        FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    Files.createFile(root.resolve("_COMPLETE"))
-    root.toString
-  }
-
-  /** embeddings as an unbounded stream, one staged file per
+  /** `st.table` as an unbounded stream, one staged file per
     * micro-batch. */
-  private def embStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagedEmb(s, dir)
-    val schema = s.read.parquet(stage + "/00.parquet").schema
-    s.readStream.schema(schema)
+  private def stream(s: SparkSession, dir: String, st: Staging)
+      : DataFrame = {
+    val staged = stage(s, dir, st)
+    s.readStream.schema(s.read.parquet(s"$staged/00.parquet").schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-  }
-
-  /** documents as an unbounded stream, one staged file per micro-batch. */
-  private def docStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = stagedDocs(s, dir)
-    val schema = s.read.parquet(stage + "/00.parquet").schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-  }
-
-  /** events as an unbounded stream, one staged file per micro-batch. */
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val stage = staged(s, dir)
-    val schema = s.read.parquet(stage + "/00.parquet").schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
+      .parquet(staged)
   }
 
   /** Progress rows of the most recent [[runToMemory]] query. The
@@ -246,7 +131,7 @@ object StreamingOps {
     QueryDef(
       "st01_stream_tumbling_watermark",
       (s, d) => {
-        val agg = eventStream(s, d)
+        val agg = stream(s, d, Events)
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
@@ -283,7 +168,7 @@ object StreamingOps {
         val prev = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "4")
         val mat = try {
-          val agg = eventStream(s, d)
+          val agg = stream(s, d, Events)
             .groupBy(window(col("ts"), "6 hours", "3 hours"))
             .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
             .select(col("window.start").as("win_start"),
@@ -314,7 +199,7 @@ object StreamingOps {
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         try {
-          val agg = eventStream(s, d)
+          val agg = stream(s, d, Events)
             .withWatermark("ts", "10 minutes")
             .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
             .agg(count(lit(1)).as("n_events"), dsum(col("value"), 2).as("sum_value"))
@@ -354,7 +239,7 @@ object StreamingOps {
     QueryDef(
       "st04_stream_dedup",
       (s, d) => {
-        val dedup = eventStream(s, d).unionAll(eventStream(s, d))
+        val dedup = stream(s, d, Events).unionAll(stream(s, d, Events))
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), col("event_type"), col("value"))
@@ -372,12 +257,12 @@ object StreamingOps {
     QueryDef(
       "st06_stream_stream_join",
       (s, d) => {
-        val clicks = eventStream(s, d)
+        val clicks = stream(s, d, Events)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
           .withWatermark("click_ts", "1 hour")
-        val views = eventStream(s, d)
+        val views = stream(s, d, Events)
           .filter(col("event_type") === "view")
           .select(col("event_id").as("view_id"),
             col("user_id").as("view_user"), col("ts").as("view_ts"))
@@ -412,12 +297,12 @@ object StreamingOps {
     QueryDef(
       "st08_stream_stream_left_outer",
       (s, d) => {
-        val clicks = eventStream(s, d)
+        val clicks = stream(s, d, Events)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
           .withWatermark("click_ts", "1 hour")
-        val views = eventStream(s, d)
+        val views = stream(s, d, Events)
           .filter(col("event_type") === "view")
           .select(col("event_id").as("view_id"),
             col("user_id").as("view_user"), col("ts").as("view_ts"))
@@ -475,7 +360,7 @@ object StreamingOps {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-        val perUser = eventStream(s, d)
+        val perUser = stream(s, d, Events)
           .select(col("user_id"), col("event_id"))
           .as[(Long, Long)]
           .groupByKey(_._1)
@@ -522,7 +407,7 @@ object StreamingOps {
         s.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         try {
-          val out = eventStream(s, d)
+          val out = stream(s, d, Events)
             .select(col("user_id"), col("value")).as[(Long, Double)]
             .groupByKey(_._1)
             .transformWithState(new RunningMaxProcessor,
@@ -561,7 +446,7 @@ object StreamingOps {
       "st05_stream_static_join",
       (s, d) => {
         val dim = new Tables(s, d).customer
-        val agg = eventStream(s, d)
+        val agg = stream(s, d, Events)
           .join(broadcast(dim), col("user_id") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
@@ -598,9 +483,9 @@ object StreamingOps {
         val probe = "graft_bloom_known(cast(user_id as string))"
         val cols = Seq(col("event_id"), col("user_id"),
           col("event_type"), col("value"))
-        val fastPathNew = eventStream(s, d)
+        val fastPathNew = stream(s, d, Events)
           .filter(!expr(probe)).select(cols: _*)
-        val verifiedNew = eventStream(s, d)
+        val verifiedNew = stream(s, d, Events)
           .filter(expr(probe))
           .join(broadcast(known), col("user_id") === col("c_custkey"),
             "left_anti")
@@ -639,7 +524,7 @@ object StreamingOps {
         val prev = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "4")
         val mat = try {
-          val inner = eventStream(s, d)
+          val inner = stream(s, d, Events)
             .withWatermark("ts", "30 minutes")
             .groupBy(window(col("ts"), "3 hours"), col("event_type"))
             .agg(count(lit(1)).as("n"))
@@ -818,7 +703,7 @@ object StreamingOps {
         s.conf.set("spark.sql.shuffle.partitions", "4")
         val mat = try {
           val gated = graft.operators.TextAnalysis
-            .qualityClassified(docStream(s, d))
+            .qualityClassified(stream(s, d, Documents))
             .groupBy(col("lang"))
             .agg(count(lit(1)).as("n_docs"),
               sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -873,7 +758,7 @@ object StreamingOps {
         Dedup.ensureLshIndex(s, d)
         val out = Files.createTempDirectory("graft_st15_out").toString
         // the gate: per micro-batch, signatures of the batch only
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .filter(col("doc_id") % 5 === 0)
           .writeStream
           .option("checkpointLocation",
@@ -942,7 +827,7 @@ object StreamingOps {
         graft.operators.Similarity.buildBucketIndex(s, d, "st16_corpus_idx")
         val corpus = s.table("st16_corpus_idx")
         val qs = graft.operators.Similarity.probeRows(s, d,
-          embStream(s, d).filter(col("vec_id") % 2 === 1)
+          stream(s, d, Embeddings).filter(col("vec_id") % 2 === 1)
             .select(col("vec_id"), col("embedding")))
         val top = qs.join(corpus, col("probe") === col("bucket_c"))
           .withColumn("cos_sim",
@@ -982,7 +867,7 @@ object StreamingOps {
         // re-derivation; a new persisted generation (nightly rebuild)
         // is picked up next batch without restart
         val idxCache = new Similarity.PqIndexCache(s)
-        val q = embStream(s, d)
+        val q = stream(s, d, Embeddings)
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))
           .writeStream
@@ -1023,7 +908,7 @@ object StreamingOps {
         val out = Files.createTempDirectory("graft_st18_out").toString
         // same generation-cached discipline as st17
         val idxCache = new Similarity.PqIndexCache(s)
-        val q = embStream(s, d)
+        val q = stream(s, d, Embeddings)
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("q_id"), col("embedding").as("av"),
             col("label"))
@@ -1068,7 +953,7 @@ object StreamingOps {
         val out = Files.createTempDirectory("graft_st19_out").toString
         val idxCache = new Similarity.PqIndexCache(s)
         val lexCache = new Similarity.LexIndexCache(s)
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .select(col("doc_id"), col("text"))
           .writeStream
           .option("checkpointLocation",
@@ -1103,7 +988,7 @@ object StreamingOps {
       "st20_stream_crossmodal",
       (s, d) => {
         val out = Files.createTempDirectory("graft_st20_out").toString
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .select(col("doc_id"), col("text"))
           .writeStream
           .option("checkpointLocation",
@@ -1148,7 +1033,7 @@ object StreamingOps {
           .agg(min(col("w_scaled")), max(col("w_scaled"))).head()
         val (wmin, wmax) = (mm.getLong(0), mm.getLong(1))
         val out = Files.createTempDirectory("graft_st21_out").toString
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .select(col("doc_id"), col("lang"), col("text"))
           .writeStream
           .option("checkpointLocation",
@@ -1204,7 +1089,7 @@ object StreamingOps {
           .write.mode("overwrite").parquet(idxDir)
         val idx = s.read.parquet(idxDir)
         val out = Files.createTempDirectory("graft_st22_out").toString
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .filter(col("doc_id") % 3 === 2)
           .filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"))
@@ -1246,7 +1131,7 @@ object StreamingOps {
         Similarity.ensurePqIndex(s, d)
         val out = Files.createTempDirectory("graft_st23_out").toString
         val idxCache = new Similarity.PqIndexCache(s)
-        val q = embStream(s, d)
+        val q = stream(s, d, Embeddings)
           .filter(Similarity.mmrQueryGate(s, d))
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))
           .writeStream
@@ -1292,7 +1177,7 @@ object StreamingOps {
         val floor = m.getAs[Int]("floor")
         val bands = m.getAs[Int]("bands")
         val out = Files.createTempDirectory("graft_st24_out").toString
-        val q = docStream(s, d)
+        val q = stream(s, d, Documents)
           .filter(col("doc_id") % 3 === 2)
           .filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"))

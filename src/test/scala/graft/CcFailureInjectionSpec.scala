@@ -71,7 +71,7 @@ class CcFailureInjectionSpec extends SparkSpec {
     val baseOut = base.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     base.unpersist()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_inject")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_cc_inject"))
     try {
       spark.conf.set(GraftConf.CcReliableCheckpointKey, "true")
       spark.conf.set(GraftConf.CcCheckpointDirKey, dir.toString)

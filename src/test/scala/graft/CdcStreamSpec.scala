@@ -77,8 +77,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("change feed resumes from its checkpoint without re-emission") {
     mkTable("resume")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-cdc-ckpt-").toString
+    val ckpt = tmpDir("graft-cdc-ckpt-")
     // memory sink cannot recover a checkpoint; foreachBatch can —
     // and is the realistic CDC-consumer shape anyway
     def runOnce(): Seq[(Long, String, Long)] = {

@@ -55,7 +55,7 @@ class DeepChainSpec extends SparkSpec {
     val baseOut = base.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     base.unpersist()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_cc_ckpt"))
     try {
       spark.conf.set(GraftConf.CcReliableCheckpointKey, "true")
       spark.conf.set(GraftConf.CcCheckpointDirKey, dir.toString)

@@ -12,8 +12,7 @@ class FormatsSpec extends SparkSpec {
 
   test("JSONL round-trip is row- and content-exact (including newline-bearing text)") {
     val docs = new Tables(spark, sf).documents
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_fmt_json").toString
+    val out = tmpDir("graft_fmt_json")
     // plant a pathological row: newlines, quotes, unicode, backslash
     val nasty = docs.limit(0).union(spark.sql(
       """SELECT 9999999L AS doc_id,
@@ -29,8 +28,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("CSV round-trip preserves doubles bit-exactly and quoted strings") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_fmt_csv").toString
+    val out = tmpDir("graft_fmt_csv")
     import spark.implicits._
     val src = Seq(
       (1L, "plain", 1.0),
@@ -56,8 +54,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("dirty JSONL: PERMISSIVE quarantines corrupt lines, FAILFAST refuses") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fmt_dirty").toString
+    val dir = tmpDir("graft_fmt_dirty")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "part-0.json"),
       ("""{"doc_id": 1, "text": "ok one"}""" + "\n" +
@@ -99,8 +96,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC re-read pushes predicates and prunes columns") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_fmt_orc").toString
+    val out = tmpDir("graft_fmt_orc")
     new Tables(spark, sf).lineitem.write.mode("overwrite").orc(out)
     val q = spark.read.orc(out)
       .filter(col("l_quantity") >= 30.0)

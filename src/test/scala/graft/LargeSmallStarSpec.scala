@@ -42,7 +42,7 @@ class LargeSmallStarSpec extends SparkSpec {
     val (nodes, edges) = chain(n)
     val (base, baseRounds) = Dedup.ccLargeSmallStar(nodes, edges)
     val baseOut = base.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_star")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_cc_ckpt_star"))
     try {
       spark.conf.set(GraftConf.CcReliableCheckpointKey, "true")
       spark.conf.set(GraftConf.CcCheckpointDirKey, dir.toString)

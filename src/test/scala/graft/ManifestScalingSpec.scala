@@ -18,8 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of files. */
 class ManifestScalingSpec extends AnyFunSuite {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  private def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
 
   test("append commits reuse segments: total manifest work is near-linear") {
     val dir = tmpDir("mscale")

@@ -341,7 +341,7 @@ class RowLevelOpsSpec extends SparkSpec {
     // stage a (fake) rewritten survivor file like the delete would
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    val stage = java.nio.file.Files.createTempDirectory("ser-stage-")
+    val stage = java.nio.file.Paths.get(tmpDir("ser-stage-"))
     spark.range(1).select(col("id"), lit(2).as("batch"),
       lit(0.0).as("amt")).coalesce(1).write.mode("overwrite")
       .parquet(stage.toString)

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Harness.session(getClass.getSimpleName, 4)
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
 
   /** Register-once bronze catalog for the SHARED session: the session
     * caches the catalog instance on first use, while foreachBatch
@@ -26,5 +25,26 @@ trait SparkSpec extends AnyFunSuite {
   }
 }
 
-object SparkSpec
+object SparkSpec {
+
+  private val made =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  // removed at JVM exit, not at suite end: suites of one forked JVM
+  // share the bronze warehouse dir
+  sys.addShutdownHook(made.forEach { p =>
+    try LocalFs.deleteTree(p)
+    catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+  })
+
+  /** A fresh directory under `java.io.tmpdir`, deleted when the JVM
+    * exits. */
+  def tmpDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(p)
+    p.toString
+  }
+}
 

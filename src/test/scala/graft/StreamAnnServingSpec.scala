@@ -21,7 +21,8 @@ class StreamAnnServingSpec extends SparkSpec {
 
       // the run really was MULTI-batch: the staged query stream is 3
       // files replayed one per trigger (maxFilesPerTrigger = 1)
-      val dirs = new java.io.File("/tmp").listFiles()
+      val dirs = new java.io.File(System.getProperty("java.io.tmpdir"))
+        .listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("graft_embstream_"))
       assert(dirs.nonEmpty, "no staged embedding stream dir")
       assert(dirs.exists(d => d.listFiles()

@@ -481,7 +481,7 @@ class TimeTravelSpec extends SparkSpec {
     // schema drift across files widens the compacted file instead of
     // silently truncating it to one footer's view
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-optraw-").toString
+    val dir = tmpDir("graft-optraw-")
     spark.range(10).select(col("id"), lit(1).as("batch"))
       .coalesce(1).write.mode("append").parquet(dir)
     spark.range(5).select(col("id"), lit(2).as("batch"),
