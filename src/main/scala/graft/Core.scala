@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType, TimestampNTZType, TimestampType}
@@ -224,15 +224,16 @@ object Derived {
     out
   }
 
-  /** `<java.io.tmpdir>/<prefix><md5 of key>`: where a fixture derived
-    * from the sources named by `key` lives. */
+  /** `<java.io.tmpdir>/<prefix><md5 of key>`: where data derived from
+    * `key` lives — a fixture from its sources, an index tower or a
+    * query's warehouse from its corpus dir. */
   def under(prefix: String, key: String): String = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
     s"${System.getProperty("java.io.tmpdir")}/$prefix${hex.take(12)}"
   }
 
-  private def stamp(version: String, sources: Seq[String]): String =
+  private[graft] def stamp(version: String, sources: Seq[String]): String =
     (version +: sources.flatMap(CorpusStats.listing).map {
       case (p, size, mtime) => s"$p\t$size\t$mtime"
     }).mkString("", "\n", "\n")
@@ -240,6 +241,111 @@ object Derived {
   private def stampOf(dir: Path): Option[String] =
     try Some(Files.readString(dir.resolve(StampFile)))
     catch { case _: java.nio.file.NoSuchFileException => None }
+}
+
+/** A persisted index over one source table of a corpus dir (s18 IVF-PQ
+  * over `embeddings`; s21 BM25, d10 LSH bands and m09 perceptual hash
+  * over `documents`): catalog `tables` plus a one-row `meta` table.
+  * Unlike a [[Derived]] dir, a tower is maintained in place (delta
+  * appends, compactions) and its meta carries a monotone `gen` that
+  * serving streams watch through a [[Cache]]. What the two share is
+  * the stamp: every meta row records `source_stamp`, the tower's
+  * version and corpus dir plus the file listing of
+  * `<d>/<source>.parquet` it was built from, so a corpus rewritten in
+  * place, another dir or an older schema all read as stale. */
+final class IndexTower(meta: String, tables: Seq[String], source: String,
+    schemaVer: Int) {
+
+  /** `<java.io.tmpdir>/graft_<table>-<hex>`: where `table` of the tower
+    * over corpus `d` lives (compactions alternate `-a`/`-b` siblings). */
+  def path(d: String, table: String): String =
+    Derived.under(s"graft_$table-", d)
+
+  /** Overwrites catalog table `table` with `df` at its path for `d`,
+    * bucketed 8 ways and sorted on `bucketBy` when given. */
+  def save(s: SparkSession, d: String, df: DataFrame, table: String,
+      bucketBy: Option[String] = None): Unit = {
+    val w = df.write.mode("overwrite").option("path", path(d, table))
+    bucketBy match {
+      case Some(c) => w.bucketBy(8, c).sortBy(c).saveAsTable(table)
+      case None => w.saveAsTable(table)
+    }
+  }
+
+  /** Drops the cached file listing of every table of the tower: a
+    * rebuild overwrites them in place, possibly from another session,
+    * and a reader holding the old listing would fail on deleted parts. */
+  def refresh(s: SparkSession): Unit =
+    (tables :+ meta).foreach(refreshTable(s, _))
+
+  /** The meta's generation: one 1-row read, the per-micro-batch probe
+    * of a serving stream. */
+  def gen(s: SparkSession): Long = {
+    refreshTable(s, meta)
+    s.table(meta).head().getAs[Long]("gen")
+  }
+
+  /** Writes the meta row of a fresh build over `d`: the tower's own
+    * one-row `fields` plus `corpus_dir`, `schema_ver`, `source_stamp`
+    * and `gen` (the previous meta's + 1; 1 when absent or legacy). */
+  def writeMeta(s: SparkSession, d: String, fields: DataFrame): Unit = {
+    val next = try gen(s) + 1L catch { case _: Exception => 1L }
+    save(s, d, fields.select(col("*"), lit(d).as("corpus_dir"),
+      lit(schemaVer).as("schema_ver"), lit(next).as("gen"),
+      lit(stamp(d)).as("source_stamp")), meta)
+  }
+
+  /** Rewrites the meta row with gen + 1 and the `set` fields replaced,
+    * all others verbatim (the build's stamp too): what an append or a
+    * compaction writes so serving caches reload. */
+  def bumpGen(s: SparkSession, d: String, set: (String, Any)*): Unit = {
+    refreshTable(s, meta)
+    val mt = s.table(meta)
+    val m = mt.head()
+    val vals = set.toMap + ("gen" -> (m.getAs[Long]("gen") + 1L))
+    val row = Row.fromSeq(mt.schema.fieldNames.toSeq
+      .map(f => vals.getOrElse(f, m.getAs[Any](f))))
+    save(s, d, s.createDataFrame(java.util.List.of(row), mt.schema), meta)
+  }
+
+  /** True when every table exists and the meta was stamped from the
+    * current files of `<d>/<source>.parquet` under this schema version,
+    * and the tower's own checks `extra` pass on the meta row. */
+  def fresh(s: SparkSession, d: String)(extra: Row => Boolean): Boolean = {
+    refresh(s)
+    val cat = s.sessionState.catalog
+    (tables :+ meta).forall(t => cat.tableExists(
+      org.apache.spark.sql.catalyst.TableIdentifier(t))) && {
+      val mt = s.table(meta)
+      mt.columns.contains("source_stamp") && {
+        val m = mt.head()
+        m.getAs[String]("source_stamp") == stamp(d) && extra(m)
+      }
+    }
+  }
+
+  private def stamp(d: String): String =
+    Derived.stamp(s"$meta-v$schemaVer\t$d", Seq(s"$d/$source.parquet"))
+
+  private def refreshTable(s: SparkSession, t: String): Unit =
+    try s.catalog.refreshTable(t)
+    catch { case _: Exception => () } // missing table: nothing cached
+
+  /** Generation-cached handle on the tower for serving streams: a
+    * steady-state micro-batch pays one 1-row meta read, and a rebuild,
+    * append or compaction that stamps a new generation is served from
+    * the next micro-batch on, without restarting the stream.
+    * Synchronized: two serving streams may share one cache. */
+  class Cache[A](s0: SparkSession, load: SparkSession => A) {
+    private var cached: (Long, A) = (gen(s0), load(s0))
+    def current(sess: SparkSession): A = synchronized {
+      val g = gen(sess)
+      if (g != cached._1) cached = (g, load(sess))
+      cached._2
+    }
+    /** Generation of the index the last `current()` call served. */
+    def lastGen: Long = synchronized(cached._1)
+  }
 }
 
 object LocalFs {
@@ -253,6 +359,25 @@ object LocalFs {
         .forEach(p => Files.deleteIfExists(p))
       finally walk.close()
     }
+
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  // removed at JVM exit, not earlier: a query's result may be read
+  // from its scratch sink long after the query returned
+  sys.addShutdownHook(made.forEach { p =>
+    try deleteTree(p)
+    catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+  })
+
+  /** A fresh directory under `java.io.tmpdir`, deleted when the JVM
+    * exits. */
+  def scratch(prefix: String): String = {
+    val p = Files.createTempDirectory(prefix)
+    made.add(p)
+    p.toString
+  }
 }
 
 object Parquet {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{CorpusStats, GraftConf, QueryDef, Tables}
+import graft.{CorpusStats, GraftConf, IndexTower, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -290,7 +290,8 @@ object Dedup {
   // (corpus doc, band) — (doc_id, n, band, band_key) — so work at
   // probe time scales with |delta| · bands, never |corpus|².
 
-  private[graft] val LshMetaSchemaVer = 1
+  /** v2 added the source stamp. */
+  private[graft] val LshMetaSchemaVer = 2
   private[graft] val LshAuditSample = 256L
 
   /** Staleness dials (compile-time defaults; callers owning a policy
@@ -301,28 +302,9 @@ object Dedup {
   private[graft] val LshMinCoverage = 0.98
   private[graft] val LshMaxBandDefect = 0.02
 
-  private def lshPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def lshSave(s: SparkSession, d: String, dfx: DataFrame,
-      table: String): Unit =
-    dfx.write.mode("overwrite").option("path", lshPath(d, table))
-      .saveAsTable(table)
-
-  private def refreshLshTables(s: SparkSession): Unit =
-    Seq("d10_lsh_bands", "d10_lsh_hot", "d10_lsh_meta").foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
-  private def lshPrevGen(s: SparkSession): Long =
-    try {
-      refreshLshTables(s)
-      val mt = s.table("d10_lsh_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
+  /** The persisted band index (d10) over `documents`. */
+  private[graft] val LshTower = new IndexTower("d10_lsh_meta",
+    Seq("d10_lsh_bands", "d10_lsh_hot"), "documents", LshMetaSchemaVer)
 
   /** The historical-corpus stripe the index covers (d10's split:
     * doc_id % 5 == 0 is "today's ingest", the rest is the corpus). */
@@ -344,7 +326,7 @@ object Dedup {
   private[graft] def persistLshIndex(s: SparkSession, d: String,
       docGate: org.apache.spark.sql.Column = lit(true)): Unit = {
     val (hashes, bands) = minhashGeometry(s)
-    lshSave(s, d,
+    LshTower.save(s, d,
       minhashBands(
         minhashSigs(cappedShingles(s, d)
           .filter(col("doc_id") % 5 =!= 0).filter(docGate), hashes),
@@ -354,47 +336,22 @@ object Dedup {
     // (st15) caps each micro-batch's shingles against it, so the
     // corpus is never re-tokenized at serve; derived corpus-wide,
     // exactly as cappedShingles derives it for the batch passes
-    lshSave(s, d, hotShingles(s, d), "d10_lsh_hot")
+    LshTower.save(s, d, hotShingles(s, d), "d10_lsh_hot")
     val nd = lshStripe(s, d).filter(docGate).count()
     import s.implicits._
-    lshSave(s, d,
-      Seq((nd, hashes, bands, d, LshMetaSchemaVer, lshPrevGen(s) + 1L))
-        .toDF("nd", "hashes", "bands", "corpus_dir", "schema_ver",
-          "gen"),
-      "d10_lsh_meta")
-  }
-
-  /** The index's GENERATION stamp alone — the 1-row freshness probe
-    * (the [[graft.operators.Similarity]] `loadPqMetaGen` twin). */
-  private[graft] def loadLshMetaGen(s: SparkSession): Long = {
-    refreshLshTables(s)
-    s.table("d10_lsh_meta").head().getAs[Long]("gen")
+    LshTower.writeMeta(s, d,
+      Seq((nd, hashes, bands)).toDF("nd", "hashes", "bands"))
   }
 
   /** Load the persisted band index when one is fresh for this corpus
-    * AND this session's geometry dials, else build + persist. The
-    * fingerprint is the exact corpus-dir string, the schema version,
-    * and the (hashes, bands) geometry — the same field-by-field
-    * discipline as `ensurePqIndex`/`ensureLexIndex`. */
+    * AND this session's geometry dials, else build + persist. Fresh
+    * means the tower's source stamp matches the current files of
+    * `documents.parquet` and the meta's (hashes, bands) geometry is
+    * the session's. */
   private[graft] def ensureLshIndex(s: SparkSession, d: String): DataFrame = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshLshTables(s)
     val (hashes, bands) = minhashGeometry(s)
-    val metaCols =
-      Set("nd", "hashes", "bands", "corpus_dir", "schema_ver", "gen")
-    val fresh = exists("d10_lsh_bands") && exists("d10_lsh_hot") &&
-      exists("d10_lsh_meta") && {
-      val mt = s.table("d10_lsh_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == LshMetaSchemaVer &&
-          m.getAs[Int]("hashes") == hashes &&
-          m.getAs[Int]("bands") == bands
-      }
-    }
+    val fresh = LshTower.fresh(s, d)(m =>
+      m.getAs[Int]("hashes") == hashes && m.getAs[Int]("bands") == bands)
     if (!fresh) persistLshIndex(s, d)
     s.table("d10_lsh_bands")
   }
@@ -419,7 +376,7 @@ object Dedup {
   private[graft] def auditLshCoverage(s: SparkSession, d: String,
       minCoverageOverride: Option[Double] = None,
       maxBandDefectOverride: Option[Double] = None): DataFrame = {
-    refreshLshTables(s)
+    LshTower.refresh(s)
     val m = s.table("d10_lsh_meta").head()
     val ndIndex = m.getAs[Long]("nd")
     val (hashes, bands) = minhashGeometry(s)
@@ -903,7 +860,7 @@ object Dedup {
       (s, d) => {
         persistLshIndex(s, d, col("doc_id") % 7 =!= 0)
         maintainLshIndex(s, d)
-        refreshLshTables(s)
+        LshTower.refresh(s)
         deltaDedupServe(s, d, s.table("d10_lsh_bands"))
       },
       Some(d10OracleSql)),

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Derived, QueryDef, Tables}
+import graft.{Derived, LocalFs, QueryDef, Tables}
 import graft.functions.{avro, AvroSchemaConverter}
 import graft.pipeline.BronzeIngest
 import graft.sources.kafkasim.SimBroker
@@ -104,8 +104,8 @@ object KafkaOps {
       "k02_kafka_stream_ingest",
       (s, d) => {
         val root = brokerFor(s, d)
-        val ckpt = Files.createTempDirectory("graft_k02_ckpt").toString
-        val sink = Files.createTempDirectory("graft_k02_sink").toString
+        val ckpt = LocalFs.scratch("graft_k02_ckpt")
+        val sink = LocalFs.scratch("graft_k02_sink")
         val q = BronzeIngest.streamJob(s, root, "orders", ckpt, sink)
         q.awaitTermination()
         s.read.parquet(sink)
@@ -121,8 +121,8 @@ object KafkaOps {
     QueryDef(
       "k03_loss_detection",
       (s, d) => {
-        val root = Files.createTempDirectory("graft_k03_broker").toString
-        val ckpt = Files.createTempDirectory("graft_k03_ckpt").toString
+        val root = LocalFs.scratch("graft_k03_broker")
+        val ckpt = LocalFs.scratch("graft_k03_ckpt")
         // p0: 120 records in segments of 20, expired through 80
         (0 until 6).foreach { g => SimBroker.append(root, "orders", 0,
           (0 until 20).map(i => (None, s"p0-${g * 20 + i}".getBytes, 0L))) }
@@ -192,8 +192,7 @@ object KafkaOps {
       "k04_composed_bronze_roundtrip",
       (s, d) => {
         val root = brokerFor(s, d)
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_k04-" +
-          Integer.toHexString(d.hashCode)
+        val wh = Derived.under("graft_k04-", d)
         val cat = "k04cat_" + Integer.toHexString(d.hashCode)
         s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.BronzeCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -213,8 +212,7 @@ object KafkaOps {
           .select(col("data.orderId").as("order_id"),
             col("data.amount").as("amount"), col("data.ts").as("ts"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_k04_ckpt1").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_k04_ckpt1"))
           .trigger(Trigger.AvailableNow())
           .toTable(s"$cat.db.orders_e2e")
         q1.awaitTermination()
@@ -231,8 +229,7 @@ object KafkaOps {
             col("n_orders"), col("total_amount"))
           .writeStream.format("memory").queryName(sink)
           .outputMode("complete")
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_k04_ckpt2").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_k04_ckpt2"))
           .trigger(Trigger.AvailableNow()).start()
         q2.awaitTermination()
         s.table(sink).orderBy(col("win_start"))

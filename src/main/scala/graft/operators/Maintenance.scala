@@ -65,10 +65,10 @@ object Maintenance {
       lshMaxBandDefectOverride: Option[Double] = None,
       phMinCoverageOverride: Option[Double] = None,
       phMaxDefectOverride: Option[Double] = None): DataFrame = {
-    val pqG0 = genOf(Similarity.loadPqMetaGen(s))
-    val lexG0 = genOf(Similarity.loadLexMetaGen(s))
-    val lshG0 = genOf(Dedup.loadLshMetaGen(s))
-    val phG0 = genOf(Multimodal.loadPhMetaGen(s))
+    val pqG0 = genOf(Similarity.PqTower.gen(s))
+    val lexG0 = genOf(Similarity.LexTower.gen(s))
+    val lshG0 = genOf(Dedup.LshTower.gen(s))
+    val phG0 = genOf(Multimodal.PhTower.gen(s))
     Similarity.ensurePqIndex(s, d)
     Similarity.ensureLexIndex(s, d)
     Dedup.ensureLshIndex(s, d)
@@ -81,10 +81,10 @@ object Maintenance {
       lshMinCoverageOverride, lshMaxBandDefectOverride)
     val phDue = Multimodal.maintainPhashIndex(s, d,
       phMinCoverageOverride, phMaxDefectOverride)
-    val pqG1 = Similarity.loadPqMetaGen(s)
-    val lexG1 = Similarity.loadLexMetaGen(s)
-    val lshG1 = Dedup.loadLshMetaGen(s)
-    val phG1 = Multimodal.loadPhMetaGen(s)
+    val pqG1 = Similarity.PqTower.gen(s)
+    val lexG1 = Similarity.LexTower.gen(s)
+    val lshG1 = Dedup.LshTower.gen(s)
+    val phG1 = Multimodal.PhTower.gen(s)
     import s.implicits._
     Seq(
       ("vector", pqG1 != pqG0, pqDue, pqG1),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{CorpusStats, QueryDef, Tables}
+import graft.{CorpusStats, IndexTower, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -572,7 +572,7 @@ object Multimodal {
       (s, d) => {
         persistPhashIndex(s, d, col("doc_id") % 7 =!= 0)
         maintainPhashIndex(s, d)
-        refreshPhTables(s)
+        PhTower.refresh(s)
         val m = s.table("m09_ph_meta").head()
         twoTierGateBatch(
           new Tables(s, d).documents
@@ -741,12 +741,11 @@ object Multimodal {
   // `Maintenance.maintainIndexes`. Unlike the other towers the
   // GEOMETRY here is count-DERIVED, not conf-dialed — the entropy
   // floor and band count both follow the corpus stripe's size — so
-  // ensure checks only dir/schema fingerprints and geometry drift is
-  // the AUDIT's content-staleness job (a corpus that grew past a
-  // floor or band boundary needs a rebuild the fingerprint can't
-  // see).
+  // ensure checks only the tower's source stamp (a rewritten corpus
+  // rebuilds), and the AUDIT re-derives the geometry from live counts.
 
-  private[graft] val PhMetaSchemaVer = 1
+  /** v2 added the source stamp. */
+  private[graft] val PhMetaSchemaVer = 2
   private[graft] val PhAuditSample = 256L
   private[graft] val PhMinCoverage = 0.98
   private[graft] val PhMaxDefect = 0.02
@@ -754,27 +753,9 @@ object Multimodal {
   private val nbExpr =
     greatest(lit(1), expr("cast((length(text) + 15) div 16 as int)"))
 
-  private def phPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def phSave(dfx: DataFrame, d: String, table: String): Unit =
-    dfx.write.mode("overwrite").option("path", phPath(d, table))
-      .saveAsTable(table)
-
-  private[graft] def refreshPhTables(s: SparkSession): Unit =
-    Seq("m09_ph_bands", "m09_ph_cks", "m09_ph_meta").foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
-  private def phPrevGen(s: SparkSession): Long =
-    try {
-      refreshPhTables(s)
-      val mt = s.table("m09_ph_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
+  /** The persisted phash gate index (m09) over `documents`. */
+  private[graft] val PhTower = new IndexTower("m09_ph_meta",
+    Seq("m09_ph_bands", "m09_ph_cks"), "documents", PhMetaSchemaVer)
 
   /** The historical-corpus media stripe the tower covers (st24's
     * split: doc_id % 5 == 0 is "today's ingest"). */
@@ -799,47 +780,24 @@ object Multimodal {
     val floor = entropyFloorBlocks(nd)
     val tierDocs = stripe.filter(nbExpr >= floor)
     val bands = Dedup.adaptiveSimHashBands(PHashBits, tierDocs.count())
-    phSave(bandedPhashOfSigs(perceptualHashesOf(tierDocs), bands),
-      d, "m09_ph_bands")
-    phSave(stripe.filter(nbExpr < floor)
-      .select(col("doc_id"), md5(col("text")).as("ck")),
-      d, "m09_ph_cks")
+    PhTower.save(s, d,
+      bandedPhashOfSigs(perceptualHashesOf(tierDocs), bands), "m09_ph_bands")
+    PhTower.save(s, d, stripe.filter(nbExpr < floor)
+      .select(col("doc_id"), md5(col("text")).as("ck")), "m09_ph_cks")
     import s.implicits._
-    phSave(Seq((nd, floor, bands, d, PhMetaSchemaVer, phPrevGen(s) + 1L))
-      .toDF("nd", "floor", "bands", "corpus_dir", "schema_ver", "gen"),
-      d, "m09_ph_meta")
-  }
-
-  /** The tower's GENERATION stamp alone — the 1-row freshness
-    * probe. */
-  private[graft] def loadPhMetaGen(s: SparkSession): Long = {
-    refreshPhTables(s)
-    s.table("m09_ph_meta").head().getAs[Long]("gen")
+    PhTower.writeMeta(s, d,
+      Seq((nd, floor, bands)).toDF("nd", "floor", "bands"))
   }
 
   /** Load the persisted gate index when one is fresh for this
-    * corpus, else build + persist. The fingerprint is the exact
-    * corpus-dir string and the schema version — there are no session
-    * dials here (geometry is count-derived); count-driven geometry
-    * drift is [[auditPhashCoverage]]'s job. */
+    * corpus, else build + persist. Fresh means the tower's source
+    * stamp matches the current files of `documents.parquet` — there
+    * are no session dials here (geometry is count-derived), and an
+    * index built over a gated sub-stripe is [[auditPhashCoverage]]'s
+    * to catch. */
   private[graft] def ensurePhashIndex(s: SparkSession,
       d: String): DataFrame = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshPhTables(s)
-    val metaCols =
-      Set("nd", "floor", "bands", "corpus_dir", "schema_ver", "gen")
-    val fresh = exists("m09_ph_bands") && exists("m09_ph_cks") &&
-      exists("m09_ph_meta") && {
-      val mt = s.table("m09_ph_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == PhMetaSchemaVer
-      }
-    }
-    if (!fresh) persistPhashIndex(s, d)
+    if (!PhTower.fresh(s, d)(_ => true)) persistPhashIndex(s, d)
     s.table("m09_ph_bands")
   }
 
@@ -860,7 +818,7 @@ object Multimodal {
   private[graft] def auditPhashCoverage(s: SparkSession, d: String,
       minCoverageOverride: Option[Double] = None,
       maxDefectOverride: Option[Double] = None): DataFrame = {
-    refreshPhTables(s)
+    PhTower.refresh(s)
     val m = s.table("m09_ph_meta").head()
     val ndIndex = m.getAs[Long]("nd")
     val metaFloor = m.getAs[Int]("floor")

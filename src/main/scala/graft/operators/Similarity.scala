@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.file.Paths
 
-import graft.{CorpusStats, GraftConf, QueryDef, Tables}
+import graft.{CorpusStats, Derived, GraftConf, IndexTower, QueryDef, Tables}
 import graft.LocalFs.deleteTree
 import graft.TopK.topKPerKey
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -656,8 +656,7 @@ object Similarity {
     * (the O(|delta|) maintenance proof: base files byte-identical
     * across the append). */
   private[graft] def s17IndexPath(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s17-" +
-      Integer.toHexString(d.hashCode)
+    Derived.under("graft_s17-", d)
 
   private[graft] def s17BuildBase(s: SparkSession, d: String): Unit = {
     // idempotent across lifecycles: clear any compaction generation a
@@ -886,8 +885,7 @@ object Similarity {
   private[graft] def buildBucketIndex(s: SparkSession, d: String,
       table: String): Unit = {
     val e = vecs(s, d).withColumn("bucket", expr(bucketExpr))
-    val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
+    val idxPath = Derived.under(s"graft_$table-", d)
     e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("c_id"), col("v").as("bv"),
         col("nrm").as("nrm_c"), col("bucket").as("bucket_c"))
@@ -1198,11 +1196,16 @@ object Similarity {
     * shape changes (v2 added the freshness fingerprint + generation +
     * measured candidate recall, and the codes table's label column;
     * v3 the SCOPE — "full" for a from-scratch build, "incremental"
-    * once [[appendPqDelta]] has extended it with frozen quantizers).
-    * [[ensurePqIndex]] treats any other version — including a
-    * pre-versioning meta table from a persistent metastore — as
-    * stale and rebuilds. */
-  private[graft] val PqMetaSchemaVer = 3
+    * once [[appendPqDelta]] has extended it with frozen quantizers;
+    * v4 the source stamp). [[ensurePqIndex]] treats any other version
+    * — including a pre-versioning meta table from a persistent
+    * metastore — as stale and rebuilds. */
+  private[graft] val PqMetaSchemaVer = 4
+
+  /** The persisted IVF-PQ index (s18) over `embeddings`. */
+  private[graft] val PqTower = new IndexTower("s18_pq_meta",
+    Seq("s18_pq_sc", "s18_pq_cells", "s18_pq_cb", "s18_pq_codes"),
+    "embeddings", PqMetaSchemaVer)
 
   /** Every session conf that changes what a PQ build would produce or
     * how the oracle resolves its twin, flattened to one comparable
@@ -1612,18 +1615,7 @@ object Similarity {
       .join(attrs, "c_id")
       .select(cols.map(col).toIndexedSeq: _*)
       .write.mode("append").insertInto("s18_pq_codes")
-    val m = s.table("s18_pq_meta").head()
-    import s.implicits._
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_meta-" +
-      Integer.toHexString(d.hashCode)
-    Seq((m.getAs[Int]("np"), m.getAs[Int]("sl"),
-        m.getAs[String]("corpus_dir"), m.getAs[String]("conf_fp"),
-        m.getAs[Int]("schema_ver"), m.getAs[Long]("gen") + 1L,
-        m.getAs[Double]("cand_recall"), "incremental"))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope")
-      .write.mode("overwrite").option("path", p)
-      .saveAsTable("s18_pq_meta")
+    PqTower.bumpGen(s, d, "scope" -> "incremental")
   }
 
   /** PQ-CODES COMPACTION (s26) — the OPTIMIZE step that closes the
@@ -1643,12 +1635,12 @@ object Similarity {
     * [[PqIndexCache]] reload off the new file listing on its next
     * micro-batch instead of reading the deleted fragments. */
   private[graft] def compactPqCodes(s: SparkSession, d: String): Unit = {
-    refreshIndexTables(s, Seq("s18_pq_codes", "s18_pq_meta"))
+    PqTower.refresh(s)
     val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prev = s.conf.get(scanKey, "true")
     val superseded = {
       s.conf.set(scanKey, "false")
-      try swapCompact(s, "s18_pq_codes", () => bumpPqGen(s, d),
+      try swapCompact(s, "s18_pq_codes", () => PqTower.bumpGen(s, d),
         (df, path, staging) =>
           df.write.mode("overwrite").option("path", path)
             .bucketBy(8, "cid").sortBy("cid").saveAsTable(staging))
@@ -1657,26 +1649,8 @@ object Similarity {
     // stamp the bumped generation BEFORE deleting the superseded
     // files (see swapCompact's Scaladoc): a crash in between leaves
     // the old generation readable for any cache still holding it
-    bumpPqGen(s, d)
+    PqTower.bumpGen(s, d)
     deleteTree(Paths.get(superseded))
-  }
-
-  /** Rewrite `s18_pq_meta` with gen+1, all other fields verbatim —
-    * the cache-invalidation stamp shared by [[compactPqCodes]]'s
-    * normal path and [[swapCompact]]'s crash recovery. */
-  private def bumpPqGen(s: SparkSession, d: String): Unit = {
-    val m = s.table("s18_pq_meta").head()
-    import s.implicits._
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_meta-" +
-      Integer.toHexString(d.hashCode)
-    Seq((m.getAs[Int]("np"), m.getAs[Int]("sl"),
-        m.getAs[String]("corpus_dir"), m.getAs[String]("conf_fp"),
-        m.getAs[Int]("schema_ver"), m.getAs[Long]("gen") + 1L,
-        m.getAs[Double]("cand_recall"), m.getAs[String]("scope")))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope")
-      .write.mode("overwrite").option("path", p)
-      .saveAsTable("s18_pq_meta")
   }
 
   /** RECALL-DRIFT AUDIT (s27) — the measured trigger behind
@@ -1918,42 +1892,22 @@ object Similarity {
     * the scan). */
   private[graft] def persistPqIndex(s: SparkSession, d: String,
       idx: PqIndex): Unit = {
-    def save(dfx: DataFrame, table: String,
-        bucketCol: Option[String]): Unit = {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-        Integer.toHexString(d.hashCode)
-      val w = dfx.write.mode("overwrite").option("path", p)
-      bucketCol match {
-        case Some(bc) => w.bucketBy(8, bc).sortBy(bc).saveAsTable(table)
-        case None => w.saveAsTable(table)
-      }
-    }
     val attrs = new Tables(s, d).embeddings
       .select(col("vec_id").as("c_id"), col("label"))
-    save(idx.scCent, "s18_pq_sc", None)
-    save(idx.cellCent, "s18_pq_cells", None)
-    save(idx.cb1f, "s18_pq_cb", None)
-    save(idx.cellm.join(attrs, "c_id"), "s18_pq_codes", Some("cid"))
+    PqTower.save(s, d, idx.scCent, "s18_pq_sc")
+    PqTower.save(s, d, idx.cellCent, "s18_pq_cells")
+    PqTower.save(s, d, idx.cb1f, "s18_pq_cb")
+    PqTower.save(s, d, idx.cellm.join(attrs, "c_id"), "s18_pq_codes",
+      Some("cid"))
     import s.implicits._
-    // meta = dials + the FRESHNESS FINGERPRINT (exact corpus dir,
-    // resolved build/serve confs, schema version — what
-    // [[ensurePqIndex]] compares; the r16 ADVICE medium: a hashCode
-    // path suffix ignored conf overrides and could collide between
-    // dirs) + a GENERATION counter (monotone per persist — what a
-    // serving stream watches to pick up a nightly rebuild without
-    // restart) + the measured candidate recall (deployer-facing
-    // geometry evidence; -1 = unmeasured, i.e. a loaded-then-
-    // re-persisted index).
-    val prevGen: Long = try {
-      val mt = s.table("s18_pq_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
-    save(Seq((idx.np, idx.sl, d, pqConfFingerprint(s),
-        PqMetaSchemaVer, prevGen + 1L, idx.candRecall, "full"))
-      .toDF("np", "sl", "corpus_dir", "conf_fp", "schema_ver",
-        "gen", "cand_recall", "scope"),
-      "s18_pq_meta", None)
+    // meta = dials + the resolved build/serve conf fingerprint (what
+    // [[ensurePqIndex]] compares next to the tower's source stamp; the
+    // r16 ADVICE medium: a conf override must rebuild) + the measured
+    // candidate recall (deployer-facing geometry evidence; -1 =
+    // unmeasured, i.e. a loaded-then-re-persisted index)
+    PqTower.writeMeta(s, d, Seq((idx.np, idx.sl, pqConfFingerprint(s),
+        idx.candRecall, "full"))
+      .toDF("np", "sl", "conf_fp", "cand_recall", "scope"))
     // the rebuild re-pointed the codes table at its base path; a
     // prior compaction may have left the previous live data under a
     // -a/-b generation dir, now orphaned (persistLexIndex's
@@ -1962,9 +1916,7 @@ object Similarity {
     // AFTER the meta stamp above: a cache still holding the old
     // generation re-probes and lands on the fresh build before the
     // old files disappear.
-    val codesBase =
-      s"${System.getProperty("java.io.tmpdir")}/graft_s18_pq_codes-" +
-        Integer.toHexString(d.hashCode)
+    val codesBase = PqTower.path(d, "s18_pq_codes")
     deleteTree(Paths.get(s"$codesBase-a"))
     deleteTree(Paths.get(s"$codesBase-b"))
   }
@@ -1973,22 +1925,8 @@ object Similarity {
     * frames from the catalog; clut re-derives from the saved
     * centroids + codebook (k·256 rows — cheaper to recompute than to
     * store per generation). */
-  /** Drop any cached file listing for the persisted index tables:
-    * a rebuild OVERWRITES them in place (possibly from another
-    * session — the nightly job next to a serving stream), and a
-    * reader holding the pre-overwrite listing would FAILED_READ_FILE
-    * on the deleted parts. Listing-only invalidation — tables are a
-    * handful of files; the next read re-lists one directory each. */
-  private def refreshIndexTables(s: SparkSession,
-      tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      try s.catalog.refreshTable(t)
-      catch { case _: Exception => () } // missing table: nothing cached
-    }
-
   private[graft] def loadPqIndex(s: SparkSession): PqIndex = {
-    refreshIndexTables(s, Seq("s18_pq_sc", "s18_pq_cells", "s18_pq_cb",
-      "s18_pq_codes", "s18_pq_meta"))
+    PqTower.refresh(s)
     val meta = s.table("s18_pq_meta").head()
     val cellCent = s.table("s18_pq_cells")
     val cb1f = s.table("s18_pq_cb")
@@ -1997,39 +1935,13 @@ object Similarity {
       pqClut(cellCent, cb1f), meta.getAs[Double]("cand_recall"))
   }
 
-  /** The persisted index's GENERATION stamp alone — one 1-row read
-    * of the meta table. The steady-state per-micro-batch freshness
-    * probe for the serving streams (st17/st18): reload the full
-    * index only when this changes (a nightly rebuild/compaction
-    * swapped a new generation in), instead of re-deriving the k·256
-    * clut every batch (the r16 ADVICE low). */
-  private[graft] def loadPqMetaGen(s: SparkSession): Long = {
-    refreshIndexTables(s, Seq("s18_pq_meta"))
-    s.table("s18_pq_meta").head().getAs[Long]("gen")
-  }
-
   /** Generation-cached handle on the persisted PQ index for the
-    * serving streams (st17/st18): the steady-state micro-batch pays
-    * ONE 1-row meta read (the generation probe) instead of a full
-    * index reload + k·256 clut re-derivation per batch (the r16
-    * ADVICE low), while a nightly rebuild/append that persists a new
-    * generation is picked up on the NEXT micro-batch without
-    * restarting the stream — the build-nightly/serve-continuously
-    * seam (`StreamIndexRefreshSpec` proves the swap mid-stream).
-    * Synchronized: foreachBatch epochs are sequential per query, but
-    * two serving streams may share one cache. */
-  private[graft] final class PqIndexCache(s0: SparkSession) {
-    private var cached: (Long, PqIndex) =
-      (loadPqMetaGen(s0), loadPqIndex(s0))
-    def current(sess: SparkSession): PqIndex = synchronized {
-      val g = loadPqMetaGen(sess)
-      if (g != cached._1) cached = (g, loadPqIndex(sess))
-      cached._2
-    }
-    /** Generation of the index the LAST `current()` call served —
-      * observability for specs and ops dashboards. */
-    def lastGen: Long = synchronized(cached._1)
-  }
+    * serving streams (st17/st18): a micro-batch re-derives the k·256
+    * clut only when a rebuild, append or compaction stamped a new
+    * generation (the r16 ADVICE low; `StreamIndexRefreshSpec` proves
+    * the swap mid-stream). */
+  private[graft] final class PqIndexCache(s0: SparkSession)
+      extends PqTower.Cache[PqIndex](s0, loadPqIndex)
 
   /** Serve-only entry for the scale probe: answer the query workload
     * from the LAST-persisted s18 index — no training, no calibration,
@@ -2039,41 +1951,28 @@ object Similarity {
     servePq(s, d, loadPqIndex(s))
 
   /** Load the persisted index when one is FRESH for this corpus AND
-    * this session's dials, else build + persist one. Freshness is the
-    * FULL persisted fingerprint, compared field by field: exact
-    * corpus-dir string (not a hashCode suffix — collisions between
-    * dirs would silently serve the wrong index), the resolved conf
-    * fingerprint (an ivfNprobe/pqShortlist/recall-pct/minCandRecall
-    * override set AFTER the persist must rebuild, or the index serves
-    * stale dials while the oracle resolves the current override — the
-    * r16 ADVICE medium), the meta schema version, and the codes
-    * table's attribute column (an old-schema index without `label`
-    * would crash the filtered serves instead of rebuilding). The
+    * this session's dials, else build + persist one. Fresh means the
+    * tower's source stamp matches the current files of
+    * `embeddings.parquet` (so a corpus rewritten in place, another
+    * dir or an older meta schema rebuilds), the resolved conf
+    * fingerprint matches (an ivfNprobe/pqShortlist/recall-pct/
+    * minCandRecall override set AFTER the persist must rebuild, or the
+    * index serves stale dials while the oracle resolves the current
+    * override — the r16 ADVICE medium), and the codes table carries
+    * the attribute column (an old-schema index without `label` would
+    * crash the filtered serves instead of rebuilding). The
     * serve-shaped queries (s18 serve-only, s19, st18) share this so a
-    * session pays at most one build per (corpus, dials). */
+    * session pays at most one build per (corpus files, dials). */
   private[graft] def ensurePqIndex(s: SparkSession, d: String): PqIndex = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    val metaCols = Set("np", "sl", "corpus_dir", "conf_fp",
-      "schema_ver", "gen", "cand_recall", "scope")
-    refreshIndexTables(s, Seq("s18_pq_meta", "s18_pq_codes"))
-    val fresh = exists("s18_pq_codes") && exists("s18_pq_meta") && {
-      val mt = s.table("s18_pq_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[String]("conf_fp") == pqConfFingerprint(s) &&
-          m.getAs[Int]("schema_ver") == PqMetaSchemaVer &&
-          // an incrementally-maintained index (s24) is intentionally
-          // NOT the from-scratch build — different training corpus,
-          // different centroids. ensure's contract is "the
-          // deterministic full-build twin", so anything but a "full"
-          // scope rebuilds (explicit serve paths use loadPqIndex)
-          m.getAs[String]("scope") == "full" &&
-          s.table("s18_pq_codes").columns.contains("label")
-      }
-    }
+    val fresh = PqTower.fresh(s, d)(m =>
+      m.getAs[String]("conf_fp") == pqConfFingerprint(s) &&
+        // an incrementally-maintained index (s24) is intentionally
+        // NOT the from-scratch build — different training corpus,
+        // different centroids. ensure's contract is "the
+        // deterministic full-build twin", so anything but a "full"
+        // scope rebuilds (explicit serve paths use loadPqIndex)
+        m.getAs[String]("scope") == "full" &&
+        s.table("s18_pq_codes").columns.contains("label"))
     if (!fresh) persistPqIndex(s, d, buildPqIndex(s, d))
     loadPqIndex(s)
   }
@@ -2659,22 +2558,13 @@ object Similarity {
   /** v2 added the monotone GENERATION counter (the same mid-stream
     * refresh contract the PQ meta carries): a v1 meta has no `gen`,
     * so the schema bump rebuilds it rather than serving a table the
-    * generation probe can't read. */
-  private[graft] val LexMetaSchemaVer = 2
+    * generation probe can't read. v3 added the source stamp. */
+  private[graft] val LexMetaSchemaVer = 3
 
-  private def lexPath(d: String, table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$table-" +
-      Integer.toHexString(d.hashCode)
-
-  private def lexSave(s: SparkSession, d: String, dfx: DataFrame,
-      table: String, bucketCol: Option[String]): Unit = {
-    val p = lexPath(d, table)
-    val w = dfx.write.mode("overwrite").option("path", p)
-    bucketCol match {
-      case Some(bc) => w.bucketBy(8, bc).sortBy(bc).saveAsTable(table)
-      case None => w.saveAsTable(table)
-    }
-  }
+  /** The persisted lexical index (s21) over `documents`. */
+  private[graft] val LexTower = new IndexTower("s21_lex_meta",
+    Seq("s21_lex_post", "s21_lex_df", "s21_lex_dl"), "documents",
+    LexMetaSchemaVer)
 
   /** Tokenize the corpus side of `d` (even doc_ids) gated by
     * `docGate`, yielding the lexical index's two base frames. */
@@ -2703,19 +2593,17 @@ object Similarity {
     val (tf0, dl0) = lexFrames(s, d, docGate)
     val tf = tf0.cache() // feeds postings AND df — one tokenization
     val dl = dl0.cache() // feeds the dl table AND the stats row
-    lexSave(s, d, tf, "s21_lex_post", Some("term"))
-    lexSave(s, d, tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
+    LexTower.save(s, d, tf, "s21_lex_post", Some("term"))
+    LexTower.save(s, d,
+      tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
       "s21_lex_df", Some("term"))
-    lexSave(s, d, dl, "s21_lex_dl", None)
+    LexTower.save(s, d, dl, "s21_lex_dl")
     val st = dl.agg(count(lit(1)).as("nd"),
       coalesce(sum(col("dl")), lit(0L)).as("tl")).head()
     tf.unpersist(false); dl.unpersist(false)
     import s.implicits._
-    lexSave(s, d,
-      Seq((st.getLong(0), st.getLong(1), d, LexMetaSchemaVer, scope,
-        lexPrevGen(s) + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
+    LexTower.writeMeta(s, d, Seq((st.getLong(0), st.getLong(1), scope))
+      .toDF("nd", "tl", "scope"))
     // the rebuild re-pointed each table at its base path; a prior
     // compaction may have left the previous live data under a -a/-b
     // generation dir, now orphaned (s17BuildBase's idempotence
@@ -2724,22 +2612,10 @@ object Similarity {
     // fresh build before the old files disappear (the same ordering
     // [[swapCompact]]'s delete-after-meta contract mandates).
     Seq("s21_lex_post", "s21_lex_dl").foreach { t =>
-      deleteTree(Paths.get(s"${lexPath(d, t)}-a"))
-      deleteTree(Paths.get(s"${lexPath(d, t)}-b"))
+      deleteTree(Paths.get(s"${LexTower.path(d, t)}-a"))
+      deleteTree(Paths.get(s"${LexTower.path(d, t)}-b"))
     }
   }
-
-  /** Generation the current lex meta carries, 0 when absent/legacy —
-    * every meta write stamps prevGen + 1 so the serving streams'
-    * generation probe sees rebuilds, delta appends, and compactions
-    * alike as "the index moved". */
-  private def lexPrevGen(s: SparkSession): Long =
-    try {
-      refreshIndexTables(s, Seq("s21_lex_meta"))
-      val mt = s.table("s21_lex_meta")
-      if (mt.columns.contains("gen")) mt.head().getAs[Long]("gen")
-      else 0L
-    } catch { case _: Exception => 0L }
 
   /** INCREMENTAL lexical-index maintenance — s17's nightly-delta
     * discipline for the postings tower: today's `deltaGate` docs
@@ -2766,21 +2642,17 @@ object Similarity {
     val merged = s.table("s21_lex_df")
       .unionByName(tfD.groupBy(col("term")).agg(count(lit(1)).as("df")))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_lex_dfmerge").toString
-    merged.write.mode("overwrite").parquet(stage)
-    lexSave(s, d, s.read.parquet(stage), "s21_lex_df", Some("term"))
+    val stage = graft.LocalFs.scratch("graft_lex_dfmerge")
+    try {
+      merged.write.mode("overwrite").parquet(stage)
+      LexTower.save(s, d, s.read.parquet(stage), "s21_lex_df", Some("term"))
+    } finally deleteTree(Paths.get(stage))
     val stD = dlD.agg(count(lit(1)).as("nd"),
       coalesce(sum(col("dl")), lit(0L)).as("tl")).head()
     tfD.unpersist(false); dlD.unpersist(false)
     val m = s.table("s21_lex_meta").head()
-    import s.implicits._
-    lexSave(s, d,
-      Seq((m.getAs[Long]("nd") + stD.getLong(0),
-        m.getAs[Long]("tl") + stD.getLong(1), d, LexMetaSchemaVer,
-        "full", m.getAs[Long]("gen") + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
+    LexTower.bumpGen(s, d, "nd" -> (m.getAs[Long]("nd") + stD.getLong(0)),
+      "tl" -> (m.getAs[Long]("tl") + stD.getLong(1)), "scope" -> "full")
   }
 
   /** OPTIMIZE pass for the incremental lexical index (s23) — s17's
@@ -2816,11 +2688,11 @@ object Similarity {
     val superseded = {
       s.conf.set(scanKey, "false")
       try Seq(
-        swapCompact(s, "s21_lex_post", () => bumpLexGen(s, d),
+        swapCompact(s, "s21_lex_post", () => LexTower.bumpGen(s, d),
           (df, path, staging) =>
             df.write.mode("overwrite").option("path", path)
               .bucketBy(8, "term").sortBy("term").saveAsTable(staging)),
-        swapCompact(s, "s21_lex_dl", () => bumpLexGen(s, d),
+        swapCompact(s, "s21_lex_dl", () => LexTower.bumpGen(s, d),
           (df, path, staging) =>
             df.coalesce(8).write.mode("overwrite").option("path", path)
               .saveAsTable(staging)))
@@ -2828,22 +2700,8 @@ object Similarity {
     }
     // gen bump BEFORE the superseded dirs go (swapCompact's contract
     // — same crash-window discipline as compactPqCodes)
-    bumpLexGen(s, d)
+    LexTower.bumpGen(s, d)
     superseded.foreach(p => deleteTree(Paths.get(p)))
-  }
-
-  /** Rewrite `s21_lex_meta` with gen+1, all other fields verbatim —
-    * shared by [[compactLexIndex]]'s normal path and
-    * [[swapCompact]]'s crash recovery. */
-  private def bumpLexGen(s: SparkSession, d: String): Unit = {
-    val m = s.table("s21_lex_meta").head()
-    import s.implicits._
-    lexSave(s, d,
-      Seq((m.getAs[Long]("nd"), m.getAs[Long]("tl"),
-        m.getAs[String]("corpus_dir"), m.getAs[Int]("schema_ver"),
-        m.getAs[String]("scope"), m.getAs[Long]("gen") + 1L))
-        .toDF("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen"),
-      "s21_lex_meta", None)
   }
 
   /** LEXICAL STALENESS AUDIT (s31) — BM25 has no recall to drift, but
@@ -2863,7 +2721,7 @@ object Similarity {
   private[graft] def auditLexStaleness(s: SparkSession, d: String,
       minCoverageOverride: Option[Double] = None,
       maxDlMismatchOverride: Option[Double] = None): DataFrame = {
-    refreshIndexTables(s, Seq("s21_lex_dl", "s21_lex_meta"))
+    LexTower.refresh(s)
     // 1-row meta read + one corpus count: bounded planning reads
     val ndIndex = s.table("s21_lex_meta").head().getAs[Long]("nd")
     val minCov = minCoverageOverride.getOrElse(LexMinCoverage)
@@ -3013,69 +2871,31 @@ object Similarity {
   }
 
   private[graft] def loadLexIndex(s: SparkSession): LexIndex = {
-    refreshIndexTables(s, Seq("s21_lex_post", "s21_lex_df",
-      "s21_lex_dl", "s21_lex_meta"))
+    LexTower.refresh(s)
     val m = s.table("s21_lex_meta").head()
     LexIndex(s.table("s21_lex_post"), s.table("s21_lex_df"),
       s.table("s21_lex_dl"), m.getAs[Long]("nd"), m.getAs[Long]("tl"))
   }
 
   /** Load the persisted lexical index when one is fresh for this
-    * corpus (exact dir string + schema version — no serving dials
-    * exist for the lexical tower, so the fingerprint is smaller than
-    * the PQ one), else build + persist. */
+    * corpus, else build + persist. Fresh means the tower's source
+    * stamp matches the current files of `documents.parquet` and the
+    * scope is "full" — no serving dials exist for the lexical tower,
+    * so there is no conf fingerprint as on the PQ one. */
   private[graft] def ensureLexIndex(s: SparkSession, d: String): LexIndex = {
-    val cat = s.sessionState.catalog
-    def exists(t: String) = cat.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-    refreshIndexTables(s, Seq("s21_lex_meta"))
-    val metaCols =
-      Set("nd", "tl", "corpus_dir", "schema_ver", "scope", "gen")
-    val fresh = exists("s21_lex_post") && exists("s21_lex_meta") && {
-      val mt = s.table("s21_lex_meta")
-      metaCols.subsetOf(mt.columns.toSet) && {
-        val m = mt.head()
-        m.getAs[String]("corpus_dir") == d &&
-          m.getAs[Int]("schema_ver") == LexMetaSchemaVer &&
-          // a base-only build whose delta never landed is STALE — an
-          // interrupted incremental job must rebuild, never serve half
-          m.getAs[String]("scope") == "full"
-      }
-    }
-    if (!fresh) persistLexIndex(s, d)
+    // a base-only build whose delta never landed is STALE — an
+    // interrupted incremental job must rebuild, never serve half
+    if (!LexTower.fresh(s, d)(_.getAs[String]("scope") == "full"))
+      persistLexIndex(s, d)
     loadLexIndex(s)
   }
 
-  /** The lexical index's GENERATION stamp alone — one 1-row read of
-    * the meta table, the steady-state per-micro-batch freshness probe
-    * for the streamed hybrid serve's lexical tower (the exact twin of
-    * [[loadPqMetaGen]] on the vector tower). */
-  private[graft] def loadLexMetaGen(s: SparkSession): Long = {
-    refreshIndexTables(s, Seq("s21_lex_meta"))
-    s.table("s21_lex_meta").head().getAs[Long]("gen")
-  }
-
   /** Generation-cached handle on the persisted lexical index for the
-    * serving streams (st19): the steady-state micro-batch pays ONE
-    * 1-row meta read instead of the full [[ensureLexIndex]] freshness
-    * walk (4 table refreshes + two meta reads) per batch, while a
-    * nightly rebuild, delta append (s22), or compaction that stamps a
-    * new generation is picked up on the NEXT micro-batch without
-    * restarting the stream — [[StreamLexRefreshSpec]] proves the swap
-    * mid-stream, completing for the lexical tower what
-    * [[StreamIndexRefreshSpec]] proved for the PQ tower. Synchronized
-    * for the same reason as [[PqIndexCache]]. */
-  private[graft] final class LexIndexCache(s0: SparkSession) {
-    private var cached: (Long, LexIndex) =
-      (loadLexMetaGen(s0), loadLexIndex(s0))
-    def current(sess: SparkSession): LexIndex = synchronized {
-      val g = loadLexMetaGen(sess)
-      if (g != cached._1) cached = (g, loadLexIndex(sess))
-      cached._2
-    }
-    /** Generation of the index the LAST `current()` call served. */
-    def lastGen: Long = synchronized(cached._1)
-  }
+    * serving streams (st19): a nightly rebuild, delta append (s22) or
+    * compaction is served from the next micro-batch on without a
+    * restart — [[StreamLexRefreshSpec]] proves the swap mid-stream. */
+  private[graft] final class LexIndexCache(s0: SparkSession)
+      extends LexTower.Cache[LexIndex](s0, loadLexIndex)
 
   /** One micro-batch of hybrid queries (doc_id, text) against the
     * persisted indexes — the st19 streaming entry AND s21's
@@ -4052,9 +3872,9 @@ object Similarity {
 
     // ----- s18 SERVE-ONLY: the steady-state deployment shape (nightly
     // build, continuous serve) as its own gated + BENCHED query. The
-    // fn reuses an index already persisted FOR THIS CORPUS (table
-    // location carries the corpus-dir fingerprint — an index persisted
-    // for another dir is stale and rebuilt) and otherwise pays one
+    // fn reuses an index already persisted FOR THIS CORPUS (the meta's
+    // source stamp — an index persisted for another dir or for older
+    // files is stale and rebuilt) and otherwise pays one
     // build; under Bench's min-of-N reps the rebuild lands in rep 1
     // and the min reports the pure serve wall — the 2.2 ms/query path
     // the docs tell deployers to run, previously guarded only by the
@@ -4645,8 +4465,7 @@ object Similarity {
       "s13_persisted_bucket_index",
       (s, d) => {
         val e = vecs(s, d).withColumn("bucket", expr(bucketExpr))
-        val idxPath = s"${System.getProperty("java.io.tmpdir")}/graft_s13-" +
-          Integer.toHexString(d.hashCode)
+        val idxPath = Derived.under("graft_s13-", d)
         e.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id").as("c_id"), col("v").as("bv"),
             col("nrm").as("nrm_c"), col("bucket").as("bucket_c"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exact, LocalFs, Parquet, QueryDef, Tables}
+import graft.{Derived, Exact, LocalFs, Parquet, QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,8 @@ object Writes {
   /** Scratch location, unique per (query, sf-dir) so concurrent
     * sessions over different SFs never collide; overwrite mode makes
     * reruns idempotent. */
-  private def scratch(tag: String, d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$tag-" +
-      Integer.toHexString(d.hashCode)
+  private[graft] def scratch(tag: String, d: String): String =
+    Derived.under(s"graft_$tag-", d)
 
   val queries: Seq[QueryDef] = Seq(
 

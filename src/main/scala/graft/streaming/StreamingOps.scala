@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{Derived, Exact, Parquet, QueryDef, Tables}
+import graft.{Derived, Exact, LocalFs, Parquet, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -573,8 +573,7 @@ object StreamingOps {
     QueryDef(
       "st12_stream_snapshot_source",
       (s, d) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_st12-" +
-          Integer.toHexString(d.hashCode)
+        val wh = Derived.under("graft_st12-", d)
         val cat = "st12cat_" + Integer.toHexString(d.hashCode)
         s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.BronzeCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -625,8 +624,7 @@ object StreamingOps {
     QueryDef(
       "st13_stream_change_feed",
       (s, d) => {
-        val wh = s"${System.getProperty("java.io.tmpdir")}/graft_st13-" +
-          Integer.toHexString(d.hashCode)
+        val wh = Derived.under("graft_st13-", d)
         val cat = "st13cat_" + Integer.toHexString(d.hashCode)
         s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.BronzeCatalog")
         s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -756,13 +754,12 @@ object StreamingOps {
         val (hashes, bands) = Dedup.minhashGeometry(s)
         // index build (once, nightly): the shared persisted tower
         Dedup.ensureLshIndex(s, d)
-        val out = Files.createTempDirectory("graft_st15_out").toString
+        val out = LocalFs.scratch("graft_st15_out")
         // the gate: per micro-batch, signatures of the batch only
         val q = stream(s, d, Documents)
           .filter(col("doc_id") % 5 === 0)
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st15_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st15_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             val batchSh = Dedup.shinglesOf(batch)
@@ -861,7 +858,7 @@ object StreamingOps {
       (s, d) => {
         import graft.operators.Similarity
         Similarity.persistPqIndex(s, d, Similarity.buildPqIndex(s, d))
-        val out = Files.createTempDirectory("graft_st17_out").toString
+        val out = LocalFs.scratch("graft_st17_out")
         // generation-cached index: the steady-state batch pays one
         // 1-row generation probe, not a full reload + clut
         // re-derivation; a new persisted generation (nightly rebuild)
@@ -871,8 +868,7 @@ object StreamingOps {
           .filter(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st17_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st17_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             Similarity.servePqBatch(sess, d, batch,
@@ -905,7 +901,7 @@ object StreamingOps {
       (s, d) => {
         import graft.operators.Similarity
         Similarity.ensurePqIndex(s, d)
-        val out = Files.createTempDirectory("graft_st18_out").toString
+        val out = LocalFs.scratch("graft_st18_out")
         // same generation-cached discipline as st17
         val idxCache = new Similarity.PqIndexCache(s)
         val q = stream(s, d, Embeddings)
@@ -913,8 +909,7 @@ object StreamingOps {
           .select(col("vec_id").as("q_id"), col("embedding").as("av"),
             col("label"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st18_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st18_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             Similarity.servePqBatchFiltered(sess, d, batch,
@@ -950,14 +945,13 @@ object StreamingOps {
         import graft.operators.Similarity
         Similarity.ensurePqIndex(s, d)
         Similarity.ensureLexIndex(s, d)
-        val out = Files.createTempDirectory("graft_st19_out").toString
+        val out = LocalFs.scratch("graft_st19_out")
         val idxCache = new Similarity.PqIndexCache(s)
         val lexCache = new Similarity.LexIndexCache(s)
         val q = stream(s, d, Documents)
           .select(col("doc_id"), col("text"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st19_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st19_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             Similarity.hybridServeBatch(sess, d, batch,
@@ -987,12 +981,11 @@ object StreamingOps {
     QueryDef(
       "st20_stream_crossmodal",
       (s, d) => {
-        val out = Files.createTempDirectory("graft_st20_out").toString
+        val out = LocalFs.scratch("graft_st20_out")
         val q = stream(s, d, Documents)
           .select(col("doc_id"), col("text"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st20_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st20_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             graft.operators.Multimodal
@@ -1032,12 +1025,11 @@ object StreamingOps {
         val mm = Pipeline.dsirWeights(corpusBk, model)
           .agg(min(col("w_scaled")), max(col("w_scaled"))).head()
         val (wmin, wmax) = (mm.getLong(0), mm.getLong(1))
-        val out = Files.createTempDirectory("graft_st21_out").toString
+        val out = LocalFs.scratch("graft_st21_out")
         val q = stream(s, d, Documents)
           .select(col("doc_id"), col("lang"), col("text"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st21_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st21_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             Pipeline.dsirWeights(Pipeline.dsirBuckets(batch), model)
               .select(col("doc_id"), col("n_tok"), col("w_scaled"),
@@ -1084,18 +1076,17 @@ object StreamingOps {
         val bands = Dedup.adaptiveSimHashBands(
           Multimodal.PHashBits, corpus.count())
         // the nightly index: banded corpus signatures, persisted once
-        val idxDir = Files.createTempDirectory("graft_st22_idx").toString
+        val idxDir = LocalFs.scratch("graft_st22_idx")
         Multimodal.bandedPhash(corpus, bands)
           .write.mode("overwrite").parquet(idxDir)
         val idx = s.read.parquet(idxDir)
-        val out = Files.createTempDirectory("graft_st22_out").toString
+        val out = LocalFs.scratch("graft_st22_out")
         val q = stream(s, d, Documents)
           .filter(col("doc_id") % 3 === 2)
           .filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st22_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st22_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             Multimodal.perceptualGateBatch(batch, idx, bands)
               .write.mode("overwrite").parquet(s"$out/b$batchId")
@@ -1129,14 +1120,13 @@ object StreamingOps {
       (s, d) => {
         import graft.operators.Similarity
         Similarity.ensurePqIndex(s, d)
-        val out = Files.createTempDirectory("graft_st23_out").toString
+        val out = LocalFs.scratch("graft_st23_out")
         val idxCache = new Similarity.PqIndexCache(s)
         val q = stream(s, d, Embeddings)
           .filter(Similarity.mmrQueryGate(s, d))
           .select(col("vec_id").as("q_id"), col("embedding").as("av"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st23_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st23_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             Similarity.mmrServeBatch(sess, d, batch,
@@ -1176,14 +1166,13 @@ object StreamingOps {
         val m = s.table("m09_ph_meta").head()
         val floor = m.getAs[Int]("floor")
         val bands = m.getAs[Int]("bands")
-        val out = Files.createTempDirectory("graft_st24_out").toString
+        val out = LocalFs.scratch("graft_st24_out")
         val q = stream(s, d, Documents)
           .filter(col("doc_id") % 3 === 2)
           .filter(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"))
           .writeStream
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_st24_ckpt").toString)
+          .option("checkpointLocation", LocalFs.scratch("graft_st24_ckpt"))
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val sess = batch.sparkSession
             Multimodal.twoTierGateBatch(batch,

@@ -41,7 +41,7 @@ class IncrementalPqSpec extends SparkSpec {
     Similarity.persistPqIndex(spark, sf,
       Similarity.buildPqIndex(spark, sf,
         Some(col("vec_id") % 10 =!= 0)))
-    assert(Similarity.loadPqMetaGen(spark) === 1L)
+    assert(Similarity.PqTower.gen(spark) === 1L)
     val cache = new Similarity.PqIndexCache(spark)
     val baseIdx = cache.current(spark)
     val baseFiles = spark.table("s18_pq_codes").inputFiles
@@ -71,7 +71,7 @@ class IncrementalPqSpec extends SparkSpec {
 
     // the serving cache sees the bump and reloads — no restart; the
     // reloaded candidate map reaches the delta rows
-    assert(Similarity.loadPqMetaGen(spark) === 2L)
+    assert(Similarity.PqTower.gen(spark) === 2L)
     val refreshed = cache.current(spark)
     assert(!(refreshed eq baseIdx),
       "the append's generation bump did not refresh the cache")
@@ -103,7 +103,7 @@ class IncrementalPqSpec extends SparkSpec {
     Similarity.persistPqIndex(spark, sf,
       Similarity.buildPqIndex(spark, sf,
         Some(col("vec_id") % 10 =!= 0)))
-    assert(Similarity.loadPqMetaGen(spark) === 1L)
+    assert(Similarity.PqTower.gen(spark) === 1L)
 
     val input = tmpDir("pq-append-in")
     val out = tmpDir("pq-append-out")
@@ -177,7 +177,7 @@ class IncrementalPqSpec extends SparkSpec {
     Similarity.appendPqDelta(spark, sf, col("vec_id") % 10 === 0)
     assert(spark.table("s18_pq_meta").head()
       .getAs[String]("scope") === "incremental")
-    val gBefore = Similarity.loadPqMetaGen(spark)
+    val gBefore = Similarity.PqTower.gen(spark)
     Similarity.ensurePqIndex(spark, sf)
     val m = spark.table("s18_pq_meta").head()
     assert(m.getAs[String]("scope") === "full",

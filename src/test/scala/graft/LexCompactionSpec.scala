@@ -52,7 +52,7 @@ class LexCompactionSpec extends SparkSpec {
       "and bumps the generation") {
     buildIncremental()
     val before = snapshot()
-    val genBefore = Similarity.loadLexMetaGen(spark)
+    val genBefore = Similarity.LexTower.gen(spark)
     val postFilesBefore = spark.table("s21_lex_post").inputFiles
     val dlFilesBefore = spark.table("s21_lex_dl").inputFiles
     assert(postFilesBefore.length > 8,
@@ -74,7 +74,7 @@ class LexCompactionSpec extends SparkSpec {
       assert(after(name).sameElements(rows),
         s"compaction changed the $name table")
     }
-    assert(Similarity.loadLexMetaGen(spark) === genBefore + 1L,
+    assert(Similarity.LexTower.gen(spark) === genBefore + 1L,
       "compaction must stamp a new generation or serving streams " +
         "keep reading the deleted pre-compaction file listing")
   }

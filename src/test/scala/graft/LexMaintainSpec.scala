@@ -54,7 +54,7 @@ class LexMaintainSpec extends SparkSpec {
     dropLexTables()
     Similarity.persistLexIndex(spark, sf,
       col("doc_id") % 5 =!= 0, scope = "partial")
-    val genBefore = Similarity.loadLexMetaGen(spark)
+    val genBefore = Similarity.LexTower.gen(spark)
     assert(Similarity.maintainLexIndex(spark, sf),
       "a 0.8-coverage index must take the rebuild branch")
     val m = spark.table("s21_lex_meta").head()
@@ -63,7 +63,7 @@ class LexMaintainSpec extends SparkSpec {
       .filter(col("doc_id") % 2 === 0).count()
     assert(m.getAs[Long]("nd") === ndCorpus,
       "the rebuild must cover the whole corpus")
-    assert(Similarity.loadLexMetaGen(spark) > genBefore,
+    assert(Similarity.LexTower.gen(spark) > genBefore,
       "the rebuild must stamp a new generation or st19 streams " +
         "keep serving the stale index")
     // and the rebuilt state now audits clean
@@ -79,14 +79,14 @@ class LexMaintainSpec extends SparkSpec {
     Similarity.persistLexIndex(spark, sf,
       col("doc_id") % 5 =!= 0, scope = "partial")
     Similarity.appendLexDelta(spark, sf, col("doc_id") % 5 === 0)
-    val genBefore = Similarity.loadLexMetaGen(spark)
+    val genBefore = Similarity.LexTower.gen(spark)
     val a = Similarity.auditLexStaleness(spark, sf).head()
     assert(a.getAs[Double]("coverage") === 1.0)
     assert(a.getAs[Long]("dl_mismatches") === 0L)
     assert(!a.getAs[Boolean]("rebuild_due"))
     assert(!Similarity.maintainLexIndex(spark, sf),
       "a content-complete index must not rebuild")
-    assert(Similarity.loadLexMetaGen(spark) === genBefore,
+    assert(Similarity.LexTower.gen(spark) === genBefore,
       "a not-due maintain must leave the generation alone")
   }
 
@@ -94,9 +94,9 @@ class LexMaintainSpec extends SparkSpec {
       "rebuild branch on a fresh full index") {
     dropLexTables()
     Similarity.persistLexIndex(spark, sf)
-    val genBefore = Similarity.loadLexMetaGen(spark)
+    val genBefore = Similarity.LexTower.gen(spark)
     assert(Similarity.maintainLexIndex(spark, sf,
       minCoverageOverride = Some(1.1)))
-    assert(Similarity.loadLexMetaGen(spark) === genBefore + 1L)
+    assert(Similarity.LexTower.gen(spark) === genBefore + 1L)
   }
 }

@@ -109,9 +109,9 @@ class MaintainIndexesSpec extends SparkSpec {
       assert(!a.getAs[Boolean]("geom_ok"),
         "the audit must see the re-dialed band count")
       assert(a.getAs[Boolean]("rebuild_due"))
-      val g0 = Dedup.loadLshMetaGen(spark)
+      val g0 = Dedup.LshTower.gen(spark)
       Dedup.ensureLshIndex(spark, sf)
-      assert(Dedup.loadLshMetaGen(spark) > g0,
+      assert(Dedup.LshTower.gen(spark) > g0,
         "ensure must rebuild on a geometry mismatch")
       val m = spark.table("d10_lsh_meta").head()
       assert(m.getAs[Int]("bands") === 8)
@@ -167,7 +167,7 @@ class MaintainIndexesSpec extends SparkSpec {
     // pin this property.)
     val gateSf = "/root/testdata/sf0.01"
     def gate() = {
-      Multimodal.refreshPhTables(spark)
+      Multimodal.PhTower.refresh(spark)
       val m = spark.table("m09_ph_meta").head()
       Multimodal.twoTierGateBatch(
         new Tables(spark, gateSf).documents

@@ -54,7 +54,7 @@ class PqCompactionSpec extends SparkSpec {
     buildIncremental()
     val before = snapshot()
     assert(before("meta").head.contains("incremental"))
-    val genBefore = Similarity.loadPqMetaGen(spark)
+    val genBefore = Similarity.PqTower.gen(spark)
     val filesBefore = spark.table("s18_pq_codes").inputFiles
     assert(filesBefore.length > 8,
       "setup failed: the delta appends landed no extra codes segments")
@@ -75,7 +75,7 @@ class PqCompactionSpec extends SparkSpec {
       assert(after(name).sameElements(rows),
         s"compaction changed the $name table")
     }
-    assert(Similarity.loadPqMetaGen(spark) === genBefore + 1L,
+    assert(Similarity.PqTower.gen(spark) === genBefore + 1L,
       "compaction must stamp a new generation or serving streams " +
         "keep reading the deleted pre-compaction file listing")
   }

@@ -13,10 +13,12 @@ import graft.operators.Similarity
   * persistent-metastore index from an older schema crashed the
   * filtered serves instead of rebuilding, and two corpus dirs could
   * hashCode-collide into reusing the wrong index. The fix persists the
-  * full fingerprint in `s18_pq_meta` — exact corpus-dir string,
-  * resolved conf fingerprint, schema version — plus a monotone
-  * GENERATION counter (what a serving stream watches for nightly
-  * swaps) and the measured candidate recall, and compares all of it.
+  * full fingerprint in `s18_pq_meta` — the source stamp (corpus dir,
+  * schema version and the listing of the `embeddings.parquet` files
+  * the index was built from) and the resolved conf fingerprint — plus
+  * a monotone GENERATION counter (what a serving stream watches for
+  * nightly swaps) and the measured candidate recall, and compares all
+  * of it.
   *
   * The recall gate: `spark.graft.minCandRecall` turns the calibration
   * sample's measured candidate recall into a LOUD build failure on
@@ -74,24 +76,24 @@ class PqIndexMetaSpec extends SparkSpec {
     dropIndexTables()
     val dir = writeIsoCorpus(512, "conf")
     Similarity.ensurePqIndex(spark, dir)
-    assert(Similarity.loadPqMetaGen(spark) === 1L)
+    assert(Similarity.PqTower.gen(spark) === 1L)
     // same corpus, same confs: NO rebuild (generation unchanged)
     Similarity.ensurePqIndex(spark, dir)
-    assert(Similarity.loadPqMetaGen(spark) === 1L)
+    assert(Similarity.PqTower.gen(spark) === 1L)
     // an nprobe override set after the persist: the old suffix check
     // called this fresh and served the stale dial — now it rebuilds
     // and the loaded index carries the override
     spark.conf.set(GraftConf.IvfNprobeKey, "2")
     try {
       val idx = Similarity.ensurePqIndex(spark, dir)
-      assert(Similarity.loadPqMetaGen(spark) === 2L,
+      assert(Similarity.PqTower.gen(spark) === 2L,
         "override did not trigger a rebuild")
       assert(idx.np === 2)
       // and unsetting it is ALSO a fingerprint change — back to the
       // calibrated dial, not the pinned one
       spark.conf.unset(GraftConf.IvfNprobeKey)
       Similarity.ensurePqIndex(spark, dir)
-      assert(Similarity.loadPqMetaGen(spark) === 3L)
+      assert(Similarity.PqTower.gen(spark) === 3L)
     } finally spark.conf.unset(GraftConf.IvfNprobeKey)
   }
 
@@ -100,14 +102,14 @@ class PqIndexMetaSpec extends SparkSpec {
     val dirA = writeIsoCorpus(512, "dirA")
     val dirB = writeIsoCorpus(512, "dirB")
     Similarity.ensurePqIndex(spark, dirA)
-    val g1 = Similarity.loadPqMetaGen(spark)
+    val g1 = Similarity.PqTower.gen(spark)
     Similarity.ensurePqIndex(spark, dirB)
-    assert(Similarity.loadPqMetaGen(spark) === g1 + 1L)
+    assert(Similarity.PqTower.gen(spark) === g1 + 1L)
     assert(spark.table("s18_pq_meta").head()
       .getAs[String]("corpus_dir") === dirB)
     // and is then itself fresh
     Similarity.ensurePqIndex(spark, dirB)
-    assert(Similarity.loadPqMetaGen(spark) === g1 + 1L)
+    assert(Similarity.PqTower.gen(spark) === g1 + 1L)
   }
 
   test("an old-schema meta table or a codes table without the " +
@@ -133,9 +135,9 @@ class PqIndexMetaSpec extends SparkSpec {
     spark.read.parquet(stripped).write
       .option("path", tmpDir("pqmeta_nolabel_tbl"))
       .saveAsTable("s18_pq_codes")
-    val gBefore = Similarity.loadPqMetaGen(spark)
+    val gBefore = Similarity.PqTower.gen(spark)
     val idx = Similarity.ensurePqIndex(spark, dir)
-    assert(Similarity.loadPqMetaGen(spark) === gBefore + 1L,
+    assert(Similarity.PqTower.gen(spark) === gBefore + 1L,
       "label-less codes table was not treated as stale")
     assert(idx.cellm.columns.contains("label"))
   }

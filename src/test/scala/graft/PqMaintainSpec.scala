@@ -44,14 +44,14 @@ class PqMaintainSpec extends SparkSpec {
   test("not due -> no rebuild: generation unchanged, incremental " +
       "scope kept") {
     age()
-    val g0 = Similarity.loadPqMetaGen(spark)
+    val g0 = Similarity.PqTower.gen(spark)
     // floor 0 can never exceed a recall fraction; drift cap 1 can
     // never be exceeded by a drift of fractions — both triggers
     // armed, neither fires
     val rebuilt = Similarity.maintainPqIndex(spark, sf,
       floorOverride = Some(0.0), driftOverride = Some(1.0))
     assert(!rebuilt, "maintenance rebuilt without a due verdict")
-    assert(Similarity.loadPqMetaGen(spark) === g0,
+    assert(Similarity.PqTower.gen(spark) === g0,
       "a no-op maintenance must not stamp a new generation")
     assert(spark.table("s18_pq_meta").head().getAs[String]("scope")
       === "incremental",
@@ -61,11 +61,11 @@ class PqMaintainSpec extends SparkSpec {
   test("due -> automatic rebuild: generation bumps, scope flips to " +
       "full, and the audit re-measures clean") {
     age()
-    val g0 = Similarity.loadPqMetaGen(spark)
+    val g0 = Similarity.PqTower.gen(spark)
     val rebuilt = Similarity.maintainPqIndex(spark, sf,
       floorOverride = Some(1.1)) // recall <= 1: deterministically due
     assert(rebuilt, "an always-due floor must take the rebuild branch")
-    assert(Similarity.loadPqMetaGen(spark) === g0 + 1L,
+    assert(Similarity.PqTower.gen(spark) === g0 + 1L,
       "the rebuild must stamp a new generation or serving streams " +
         "never pick it up")
     val m = spark.table("s18_pq_meta").head()
@@ -81,7 +81,7 @@ class PqMaintainSpec extends SparkSpec {
   test("a serving stream crosses the maintenance rebuild mid-stream " +
       "without restart, exactly-once") {
     age()
-    val agedGen = Similarity.loadPqMetaGen(spark)
+    val agedGen = Similarity.PqTower.gen(spark)
 
     val input = tmpDir("maintain-in")
     val out = tmpDir("maintain-out")

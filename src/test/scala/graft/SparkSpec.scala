@@ -27,24 +27,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
 
-  private val made =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  // removed at JVM exit, not at suite end: suites of one forked JVM
-  // share the bronze warehouse dir
-  sys.addShutdownHook(made.forEach { p =>
-    try LocalFs.deleteTree(p)
-    catch {
-      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-    }
-  })
-
   /** A fresh directory under `java.io.tmpdir`, deleted when the JVM
-    * exits. */
-  def tmpDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    made.add(p)
-    p.toString
-  }
+    * exits (not at suite end: suites of one forked JVM share the
+    * bronze warehouse dir). */
+  def tmpDir(prefix: String): String = LocalFs.scratch(prefix)
 }
-

@@ -52,7 +52,7 @@ class StreamIndexRefreshSpec extends SparkSpec {
       "the NEXT micro-batch, exactly-once, without restart") {
     dropIndexTables()
     Similarity.ensurePqIndex(spark, sf) // generation 1
-    assert(Similarity.loadPqMetaGen(spark) === 1L)
+    assert(Similarity.PqTower.gen(spark) === 1L)
 
     val input = tmpDir("idx-refresh-in")
     val out = tmpDir("idx-refresh-out")
@@ -107,7 +107,7 @@ class StreamIndexRefreshSpec extends SparkSpec {
     assert(genUsed(1L) === 2L,
       s"batch 1 used gen ${genUsed(1L)} — the new generation was " +
         "not picked up without a restart")
-    assert(Similarity.loadPqMetaGen(spark) === 2L)
+    assert(Similarity.PqTower.gen(spark) === 2L)
 
     // every batch is exact against ITS OWN generation's batch serve
     val got1 = spark.read.parquet(s"$out/b0")

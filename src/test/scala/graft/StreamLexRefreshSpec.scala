@@ -60,7 +60,7 @@ class StreamLexRefreshSpec extends SparkSpec {
     // rows — withholding tomorrow's rank-1 doc makes the swap
     // OBSERVABLE, not just mechanical.
     Similarity.persistLexIndex(spark, sf, col("doc_id") % 5 =!= 2)
-    assert(Similarity.loadLexMetaGen(spark) === 1L)
+    assert(Similarity.LexTower.gen(spark) === 1L)
 
     val input = tmpDir("lex-refresh-in")
     val out = tmpDir("lex-refresh-out")
@@ -115,7 +115,7 @@ class StreamLexRefreshSpec extends SparkSpec {
     assert(genUsed(1L) === 2L,
       s"batch 1 used lex gen ${genUsed(1L)} — the appended generation " +
         "was not picked up without a restart")
-    assert(Similarity.loadLexMetaGen(spark) === 2L)
+    assert(Similarity.LexTower.gen(spark) === 2L)
 
     // every batch is exact against ITS OWN generation's batch serve
     val got1 = spark.read.parquet(s"$out/b0")

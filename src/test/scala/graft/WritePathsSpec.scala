@@ -30,8 +30,7 @@ class WritePathsSpec extends SparkSpec {
   test("w04 z-order layout prunes z-file directories for a point predicate") {
     // run w04 to materialize the layout, then point-query it
     SparkEntry.queries("w04_zorder_layout")(spark, sf)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_w04-" +
-      Integer.toHexString(sf.hashCode)
+    val out = graft.operators.Writes.scratch("w04", sf)
     val layout = spark.read.parquet(out)
     val nFiles = layout.select("zfile").distinct().count()
     val probe = layout.filter(col("zfile") === 0)
@@ -97,9 +96,8 @@ class WritePathsSpec extends SparkSpec {
   test("w03 shard export: one file per shard, rows key-ordered in-file") {
     val df = SparkEntry.queries("w03_shard_export")(spark, sf)
     assert(df.count() == 8, "eight shards expected")
-    // the query's scratch layout (same derivation as Writes.scratch)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_w03-" +
-      Integer.toHexString(sf.hashCode)
+    // the query's scratch layout
+    val out = graft.operators.Writes.scratch("w03", sf)
     val shardDirs = new java.io.File(out).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard="))
     assert(shardDirs.length == 8, s"expected 8 shard dirs in $out")
