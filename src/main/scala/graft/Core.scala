@@ -226,11 +226,16 @@ object Derived {
 
   /** `<java.io.tmpdir>/<prefix><md5 of key>`: where data derived from
     * `key` lives — a fixture from its sources, an index tower or a
-    * query's warehouse from its corpus dir. */
+    * query's warehouse from its corpus dir. Data derived from a
+    * [[LocalFs.scratch]] dir goes with it: when `key` lies under one,
+    * the path and its `-a`/`-b` compaction siblings are deleted at JVM
+    * exit too. */
   def under(prefix: String, key: String): String = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/$prefix${hex.take(12)}"
+    val out = s"${System.getProperty("java.io.tmpdir")}/$prefix${hex.take(12)}"
+    LocalFs.deleteWithScratch(key, Seq(out, s"$out-a", s"$out-b"))
+    out
   }
 
   private[graft] def stamp(version: String, sources: Seq[String]): String =
@@ -360,11 +365,13 @@ object LocalFs {
       finally walk.close()
     }
 
-  private val made = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
 
   // removed at JVM exit, not earlier: a query's result may be read
   // from its scratch sink long after the query returned
-  sys.addShutdownHook(made.forEach { p =>
+  sys.addShutdownHook(atExit.forEach { p =>
     try deleteTree(p)
     catch {
       case _: java.io.IOException | _: java.io.UncheckedIOException => ()
@@ -375,8 +382,17 @@ object LocalFs {
     * exits. */
   def scratch(prefix: String): String = {
     val p = Files.createTempDirectory(prefix)
-    made.add(p)
+    scratchDirs.add(p)
+    atExit.add(p)
     p.toString
+  }
+
+  /** Deletes `paths` at JVM exit along with the scratch dirs when `key`
+    * lies under one of them. */
+  private[graft] def deleteWithScratch(key: String, paths: Seq[String]): Unit = {
+    val k = Paths.get(key).toAbsolutePath.normalize
+    if (scratchDirs.stream.anyMatch(d => k.startsWith(d)))
+      paths.foreach(p => atExit.add(Paths.get(p)))
   }
 }
 

@@ -301,8 +301,12 @@ class BronzeCatalog extends TableCatalog with SupportsNamespaces {
     loadSnapshot(ident, Some(snap))
   }
 
-  /** Build the table over one pinned snapshot (file-list read), or —
-    * legacy dirs with no snapshot log — over the directory listing. */
+  /** Build the table over one pinned snapshot, or — legacy dirs with
+    * no snapshot log — over the directory listing. A snapshot load is
+    * metadata only: the schema is the snapshot's pinned sidecar and
+    * scans plan their files from the manifest ([[ManifestFileIndex]]),
+    * so neither the load, the analysis nor a write build lists a file
+    * or starts a Spark job, however many files the table holds. */
   private def loadSnapshot(ident: Identifier,
       snap: Option[SnapshotLog.Snapshot]): Table = {
     val dir = dirOf(ident)
@@ -312,8 +316,8 @@ class BronzeCatalog extends TableCatalog with SupportsNamespaces {
     val schema = schemaOf(dir, snap)
     val fqn = (catalogName +: ident.namespace.toSeq :+ ident.name).mkString(".")
     val parquet = snap match {
-      case Some(s) => shim.parquetTableFiles(SparkSession.active, fqn,
-        s.files.map(f => dir.resolve(f).toString), schema)
+      case Some(s) => ManifestFileIndex.table(SparkSession.active, fqn,
+        dir.toString, s.entries.sortBy(_.name), schema)
       case None => // legacy: listing-mode read, first commit will seed
         shim.parquetTable(SparkSession.active, fqn, dir.toString, Some(schema))
     }
@@ -322,7 +326,8 @@ class BronzeCatalog extends TableCatalog with SupportsNamespaces {
     // reference's `writeStream...toTable("bronze.db.orders")` works —
     // and the snapshot's manifest entries ride along so pushed filters
     // can stats-prune the file list at scan planning
-    new BronzeWritableTable(parquet, dir.toString, snap.map(_.files),
+    new BronzeWritableTable(parquet, dir.toString,
+      shim.fileTableSchema(schema), snap.map(_.files),
       snap.map(_.entries).getOrElse(Seq.empty),
       snap.map(_.eqDeletes).getOrElse(Seq.empty))
   }

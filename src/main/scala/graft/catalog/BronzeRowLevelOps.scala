@@ -186,8 +186,9 @@ final class BronzeRowLevelOperation(dir: String, declared: StructType,
           BronzeMetadataFileScan.scan(dir, affected, declared, declared,
             delsOf, eqOf)
         else
-          shim.parquetTableFiles(spark, s"cow:$dir",
-            affected.map(f => s"$dir/$f"), declared)
+          ManifestFileIndex.table(spark, s"cow:$dir", dir,
+            affected.map(f => scannedEntries.getOrElse(f,
+              SnapshotLog.FileEntry(f))), declared)
             .asInstanceOf[SupportsRead]
             .newScanBuilder(CaseInsensitiveStringMap.empty())
             .build()

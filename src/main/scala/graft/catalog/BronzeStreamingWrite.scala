@@ -40,8 +40,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * query's files and its stale-file sweep would delete them. With the
   * scope, distinct queries append; only a replay of the SAME
   * checkpoint rewrites.
+  *
+  * `tableSchema` is the schema the table reports and every write,
+  * row-level op and scan of it uses: the load's pinned declared schema
+  * in file-table form ([[shim.fileTableSchema]]). It never comes from
+  * `delegate.schema()`, which forces the delegate's file index; so a
+  * load, its analysis and a write build list nothing, and the index is
+  * built only when a scan asks for it — from the manifest for a pinned
+  * snapshot ([[ManifestFileIndex]]), by listing only in a legacy dir.
   */
 final class BronzeWritableTable(delegate: Table, dir: String,
+    tableSchema: StructType,
     snapshotFiles: Option[Seq[String]] = None,
     snapshotEntries: Seq[SnapshotLog.FileEntry] = Seq.empty,
     snapshotEqDeletes: Seq[SnapshotLog.EqDelete] = Seq.empty)
@@ -51,7 +60,7 @@ final class BronzeWritableTable(delegate: Table, dir: String,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   override def name(): String = delegate.name()
-  override def schema(): StructType = delegate.schema()
+  override def schema(): StructType = tableSchema
 
   /** The ACTIVE partition transforms (identity/days/bucket) —
     * reported to Spark (DESCRIBE/SHOW CREATE) and compiled into every
@@ -106,7 +115,7 @@ final class BronzeWritableTable(delegate: Table, dir: String,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    new BronzeRowLevelOperationBuilder(dir, delegate.schema(), info)
+    new BronzeRowLevelOperationBuilder(dir, tableSchema, info)
 
   // `DELETE FROM bronze.db.t WHERE ...` — copy-on-write via a
   // `delete` snapshot (BronzeRowDelete); refusing untranslatable
@@ -119,7 +128,7 @@ final class BronzeWritableTable(delegate: Table, dir: String,
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
     BronzeRowDelete.deleteWhere(org.apache.spark.sql.SparkSession.active,
-      dir, delegate.schema(), filters)
+      dir, tableSchema, filters)
 
   override def capabilities(): util.Set[TableCapability] = {
     val caps = new util.HashSet[TableCapability](delegate.capabilities())
@@ -137,7 +146,7 @@ final class BronzeWritableTable(delegate: Table, dir: String,
     val eqOf: SnapshotLog.FileEntry => Seq[String] = e =>
       snapshotEqDeletes
         .filter(d => d.seq > e.seq.getOrElse(Long.MinValue) &&
-          MorDeletes.eqMayApply(s"$dir/${d.name}", e, delegate.schema()))
+          MorDeletes.eqMayApply(s"$dir/${d.name}", e, tableSchema))
         .map(_.name)
     val delsOf: String => Seq[String] = {
       val byName = snapshotEntries.map(e => e.name -> e.deletes).toMap
@@ -151,8 +160,8 @@ final class BronzeWritableTable(delegate: Table, dir: String,
     if (BronzeMor.hasDeletes(snapshotEntries) ||
         snapshotEntries.exists(e => eqOf(e).nonEmpty))
       return BronzeMor.scanBuilder(dir, snapshotEntries,
-        delegate.schema(), pruneSpec,
-        () => BronzeStreamRead.microBatchStream(dir, delegate.schema(),
+        tableSchema, pruneSpec,
+        () => BronzeStreamRead.microBatchStream(dir, tableSchema,
           options),
         eqOf)
     // manifest-stats file skipping: when the pinned snapshot carries
@@ -165,12 +174,12 @@ final class BronzeWritableTable(delegate: Table, dir: String,
         null
       else filters => {
         val keep = BronzePruning.survivors(snapshotEntries,
-          delegate.schema(), filters, pruneSpec)
+          tableSchema, filters, pruneSpec)
         if (keep.size == snapshotEntries.size) None
         else {
-          val pruned = shim.parquetTableFiles(
-            org.apache.spark.sql.SparkSession.active, delegate.name(),
-            keep.map(e => s"$dir/${e.name}"), delegate.schema())
+          val pruned = ManifestFileIndex.table(
+            org.apache.spark.sql.SparkSession.active, delegate.name(), dir,
+            keep, tableSchema)
           val (rows, bytes) = BronzeStreamRead.manifestStats(keep)
           Some((pruned.asInstanceOf[SupportsRead].newScanBuilder(options),
             s" [stats-pruned ${keep.size}/${snapshotEntries.size} files]",
@@ -179,13 +188,13 @@ final class BronzeWritableTable(delegate: Table, dir: String,
       }
     BronzeStreamRead.scanBuilder(
       delegate.asInstanceOf[SupportsRead].newScanBuilder(options),
-      dir, delegate.schema(), options,
+      dir, tableSchema, options,
       // `_file` projections can't come from the delegate parquet scan;
       // a scan that needs the column diverts to the per-file reader
       // over this load's pinned snapshot (position+equality deletes
       // applied)
       required => BronzeMetadataFileScan.scan(dir, pinnedFiles,
-        delegate.schema(), required, delsOf, {
+        tableSchema, required, delsOf, {
           // prebuilt map, not a per-file linear scan: planning a
           // 100k-file snapshot must stay O(files), not O(files^2)
           val byName = snapshotEntries.map(e => e.name -> e).toMap
@@ -213,7 +222,7 @@ final class BronzeWritableTable(delegate: Table, dir: String,
           // _temporary commit protocol can surface a partial batch.
           val confs =
             shim.parquetWriterConfs(org.apache.spark.sql.SparkSession.active)
-          new BronzeBatchWrite(dir, delegate.schema(), info.queryId(), confs,
+          new BronzeBatchWrite(dir, tableSchema, info.queryId(), confs,
             partSpec)
         }
         override def toStreaming: StreamingWrite = {
@@ -230,12 +239,12 @@ final class BronzeWritableTable(delegate: Table, dir: String,
           val upsertKeys = Option(info.options.get("upsertKeys"))
             .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           upsertKeys.foreach { ks =>
-            val have = delegate.schema().fieldNames.toSet
+            val have = tableSchema.fieldNames.toSet
             val missing = ks.filterNot(have.contains)
             require(missing.isEmpty,
               s"upsertKeys not in table schema: ${missing.mkString(", ")}")
           }
-          new BronzeStreamingWrite(dir, delegate.schema(), info.queryId(),
+          new BronzeStreamingWrite(dir, tableSchema, info.queryId(),
             confs, partSpec, upsertKeys, spark)
         }
       }

@@ -76,7 +76,12 @@ object SnapshotLog {
     * with a STRICTLY SMALLER seq, so the same commit's re-inserted
     * rows survive their own retraction. Absent on entries from before
     * seq stamping — treated as MIN (old files are subject to every
-    * equality delete, the conservative direction for upserts). */
+    * equality delete, the conservative direction for upserts).
+    *
+    * `mtime`: the file's modification time (epoch ms) when its footer
+    * was scraped. With `bytes` it is the file's whole `FileStatus`, so
+    * a scan plans from the manifest ([[ManifestFileIndex]]) without a
+    * stat; absent on entries from before it was recorded. */
   final case class FileEntry(
       name: String,
       rows: Option[Long] = None,
@@ -84,7 +89,8 @@ object SnapshotLog {
       parts: Map[String, String] = Map.empty,
       stats: Map[String, ColStats] = Map.empty,
       deletes: Seq[String] = Seq.empty,
-      seq: Option[Long] = None)
+      seq: Option[Long] = None,
+      mtime: Option[Long] = None)
 
   /** One EQUALITY-DELETE sidecar (Iceberg v2's equality delete
     * files): `name` is a parquet IN THE TABLE DIR whose columns ARE
@@ -987,7 +993,7 @@ object SnapshotLog {
       val dels = Option(e.get("del")).map(_.elements().asScala
         .map(_.asText()).toSeq).getOrElse(Seq.empty)
       FileEntry(e.get("f").asText(), optLong("rows"), optLong("bytes"),
-        parts, stats, dels, optLong("seq"))
+        parts, stats, dels, optLong("seq"), optLong("mtime"))
     }.toSeq
     ManifestSegment(name, entries)
   }
@@ -1006,6 +1012,7 @@ object SnapshotLog {
       n.put("f", e.name)
       e.rows.foreach(n.put("rows", _))
       e.bytes.foreach(n.put("bytes", _))
+      e.mtime.foreach(n.put("mtime", _))
       if (e.parts.nonEmpty) {
         val p = n.putObject("parts")
         e.parts.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
@@ -1036,8 +1043,8 @@ object SnapshotLog {
 
   /** Build a [[FileEntry]] for one data file by reading its parquet
     * FOOTER (no data pages; O(1) metadata read per ADDED file — the
-    * same cost class as Iceberg writing manifest stats). Files that
-    * are not readable parquet (crash debris a test plants, or a
+    * same cost class as Iceberg writing manifest stats), plus one
+    * stat for its size and mtime. Files that are not readable parquet (crash debris a test plants, or a
     * foreign format) yield a bare name-only entry — never an error,
     * never a pruning claim. */
   private[catalog] def scrapeEntry(tableDir: String, name: String,
@@ -1102,7 +1109,10 @@ object SnapshotLog {
             if (a.nullsOk) Some(a.nulls) else None,
             ids.get(col.toLowerCase)))
         }.toMap
-        FileEntry(name, Some(rows), Some(Files.size(p)), parts, stats)
+        val attrs = Files.readAttributes(p,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        FileEntry(name, Some(rows), Some(attrs.size), parts, stats,
+          mtime = Some(attrs.lastModifiedTime.toMillis))
       }
     } catch {
       case _: Throwable => FileEntry(name, parts = parts)

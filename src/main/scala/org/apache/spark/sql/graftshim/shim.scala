@@ -459,23 +459,39 @@ object shim {
       schema,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
 
-  /** Same, but over an EXPLICIT file list — the read half of the
-    * bronze snapshot log: a table load pins one snapshot's file set,
-    * so concurrent commits never change a planned scan (snapshot
-    * isolation) and `VERSION AS OF` reads an old set. An empty list
-    * (a just-created table's v0) is a valid empty relation because
-    * the schema is always supplied, never inferred. */
+  /** Same, but over an EXPLICIT file list with the file index given —
+    * the read half of the bronze snapshot log: a table load pins one
+    * snapshot's file set, so concurrent commits never change a planned
+    * scan (snapshot isolation) and `VERSION AS OF` reads an old set.
+    * `index` (graft's `ManifestFileIndex`, read from the manifest)
+    * replaces the `InMemoryFileIndex` that `FileTable` would build by
+    * listing every file; it is built when a scan first asks for it, so
+    * building the table lists nothing. An empty list (a just-created
+    * table's v0) is a valid empty relation because the schema is always
+    * supplied, never inferred. */
   def parquetTableFiles(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
       files: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
+      schema: org.apache.spark.sql.types.StructType,
+      index: => org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex)
       : org.apache.spark.sql.connector.catalog.Table =
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+    new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
       name,
       spark,
       org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
       files,
       Some(schema),
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]) {
+      override lazy val fileIndex
+          : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+        index
+    }
+
+  /** The schema a V2 file table reports for a supplied `schema`: every
+    * field nullable (files cannot enforce NOT NULL), metadata such as
+    * parquet field ids kept. A bronze table reports it without building
+    * the file index that `FileTable.schema` forces. */
+  def fileTableSchema(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }
