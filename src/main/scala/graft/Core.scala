@@ -417,13 +417,17 @@ object Parquet {
   }
 
   /** Opens one parquet file's footer (no data pages read), applies
-    * `f` to the reader and closes it. */
+    * `f` to the reader and closes it. `path` is a LOCAL file path, read
+    * through `java.nio` (parquet's `LocalInputFile`) with read options
+    * over a plain, Hadoop-free parquet conf: no Hadoop `FileSystem`
+    * and no default-resource `Configuration` (whose first read
+    * re-parses `core-default.xml`) is built per file. */
   def withParquetFooter[A](path: String)(
       f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.conf.Configuration()))
+      new org.apache.parquet.io.LocalInputFile(Paths.get(path)),
+      org.apache.parquet.ParquetReadOptions.builder(
+        new org.apache.parquet.conf.PlainParquetConfiguration()).build())
     try f(r) finally r.close()
   }
 }

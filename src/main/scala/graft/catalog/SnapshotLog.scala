@@ -37,6 +37,8 @@ object SnapshotLog {
 
   private val LogDir = "_graft_snapshots"
   private val V = """v(\d+)\.json""".r
+  /** Hadoop's checksum of a parquet file: `.<name>.parquet.crc`. */
+  private val ChecksumDebris = """\.(.+\.parquet)\.crc""".r
 
   /** Per-column min/max/null-count statistics of ONE data file,
     * scraped from its parquet footer at commit time (metadata only,
@@ -748,13 +750,14 @@ object SnapshotLog {
     val segmentCandidates = logFiles("m-")
     // position-delete sidecars live in the TABLE dir (del-*.parquet,
     // invisible to listDataFiles) — same listing-before-reads rule
-    val deleteFileCandidates = {
+    val tableEntries = {
       val s = Files.list(Paths.get(tableDir))
-      try s.iterator.asScala.map(_.getFileName.toString)
-        .filter(n => (n.startsWith("del-") || n.startsWith("eqdel-")) &&
-          n.endsWith(".parquet")).toSeq
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq
       finally s.close()
     }
+    val deleteFileCandidates = tableEntries.filter(n =>
+      (n.startsWith("del-") || n.startsWith("eqdel-")) &&
+        n.endsWith(".parquet"))
     val expiredSnaps = expired.map(read(tableDir, _))
     val retainedSnaps = retained.map(read(tableDir, _))
     val referenced = retainedSnaps.flatMap(_.files).toSet ++ branchReferenced
@@ -810,6 +813,15 @@ object SnapshotLog {
       .filter(f => expiredDels.contains(f) ||
         oldEnough(Paths.get(tableDir, f)))
       .foreach(f => Files.deleteIfExists(Paths.get(tableDir, f)))
+    // checksum debris: Hadoop's local FileSystem wrote a hidden
+    // `.<name>.parquet.crc` next to every data file and delete sidecar
+    // it wrote, and the commit's move left it behind. Reaped once its
+    // `<name>.parquet` is gone, under the same age guard.
+    tableEntries.collect {
+      case n @ ChecksumDebris(data)
+          if !Files.exists(Paths.get(tableDir, data)) &&
+            oldEnough(Paths.get(tableDir, n)) => n
+    }.foreach(n => Files.deleteIfExists(Paths.get(tableDir, n)))
     doomed
   }
 

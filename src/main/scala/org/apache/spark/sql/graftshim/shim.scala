@@ -274,7 +274,16 @@ object shim {
     * the piece graft's bronze STREAMING_WRITE needs.
     * `ParquetWriteSupport` is `private[sql]`, hence constructed here.
     * `sessionConfs` comes from [[parquetWriterConfs]] captured on the
-    * driver. */
+    * driver.
+    *
+    * `path` is a LOCAL file path, written through `java.nio` (parquet's
+    * `LocalOutputFile`), the same posix filesystem the bronze catalog
+    * commits on with `Files.move`. No Hadoop `FileSystem` stream and no
+    * default-resource `Configuration` is built per file: the write
+    * support's conf holds only the schema and `sessionConfs`. So no
+    * `.crc` sidecar is written, no `chmod` is forked, and Hadoop's
+    * `fs.file.*`/checksum settings do not apply. The file must not
+    * exist yet; its directory (the table dir) must. */
   def rowParquetWriter(
       path: String,
       schema: org.apache.spark.sql.types.StructType,
@@ -285,16 +294,49 @@ object shim {
     import org.apache.parquet.hadoop.api.WriteSupport
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-    val conf = new Configuration()
+    val conf = parquetFileConf(sessionConfs)
     ParquetWriteSupport.setSchema(schema, conf)
-    sessionConfs.foreach { case (k, v) => conf.set(k, v) }
-    class B(p: org.apache.hadoop.fs.Path)
-        extends ParquetWriter.Builder[InternalRow, B](p) {
+    class B extends ParquetWriter.Builder[InternalRow, B](
+        new org.apache.parquet.io.LocalOutputFile(java.nio.file.Paths.get(path))) {
       override def self(): B = this
       override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
         new ParquetWriteSupport
     }
-    new B(new org.apache.hadoop.fs.Path(path)).withConf(conf).build()
+    new B().withConf(conf).build()
+  }
+
+  /** The Hadoop `Configuration` of one per-file parquet read or write:
+    * `new Configuration(false)` holding only `keys`. A default-resource
+    * conf re-parses `core-default.xml` and probes for `core-site.xml`
+    * on its first read, once per file. */
+  private def parquetFileConf(keys: Iterable[(String, String)])
+      : org.apache.hadoop.conf.Configuration = {
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
+  /** The conf both per-file row readers read `schema` through.
+    * `ParquetToSparkSchemaConverter` reads five keys from the Hadoop
+    * conf with NO defaults ("null".toBoolean throws); Spark's own
+    * reader path populates them in `ParquetFileFormat`, so their
+    * defaults are mirrored here. Field-id resolution is ON (not the
+    * default): bronze tables resolve columns by parquet field id so
+    * RENAME COLUMN is metadata-only; it only activates when the
+    * requested schema carries ids (legacy id-less tables keep name
+    * matching). */
+  private def rowReadConf(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.hadoop.conf.Configuration = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    import org.apache.spark.sql.internal.SQLConf
+    val defaults = Seq(SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .map(e => e.key -> e.defaultValue.get.toString)
+    parquetFileConf(
+      Seq(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA -> schema.json,
+        SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key -> "true") ++ defaults)
   }
 
   /** Row-at-a-time view of one parquet file, whatever decoder is
@@ -323,20 +365,12 @@ object shim {
   def vectorizedRowFileReader(
       path: String,
       schema: org.apache.spark.sql.types.StructType): RowFileReader = {
-    import org.apache.hadoop.conf.Configuration
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-    import org.apache.spark.sql.internal.SQLConf
     try {
-      val conf = new Configuration()
-      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+      val conf = rowReadConf(schema)
       conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
         classOf[ParquetReadSupport].getName)
-      Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
-        SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
-        .foreach(e => conf.set(e.key, e.defaultValue.get.toString))
-      conf.set(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, "true")
       // the base reader casts to the OLD-api FileSplit (which is-a
       // mapreduce InputSplit in Hadoop 3) — construct that one
       val split = new org.apache.hadoop.mapred.FileSplit(
@@ -411,25 +445,9 @@ object shim {
       path: String,
       schema: org.apache.spark.sql.types.StructType)
       : org.apache.parquet.hadoop.ParquetReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.hadoop.conf.Configuration
     import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
     import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
     import org.apache.spark.sql.internal.LegacyBehaviorPolicy
-    import org.apache.spark.sql.internal.SQLConf
-    val conf = new Configuration()
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    // ParquetToSparkSchemaConverter reads these from the Hadoop conf
-    // with NO defaults ("null".toBoolean throws) — Spark's own reader
-    // path populates them in ParquetFileFormat; mirror the defaults
-    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
-      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
-      .foreach(e => conf.set(e.key, e.defaultValue.get.toString))
-    // field-id resolution ON (not the default): bronze tables resolve
-    // columns by parquet field id so RENAME COLUMN is metadata-only;
-    // only activates when the requested schema carries ids (legacy
-    // id-less tables keep name matching)
-    conf.set(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, "true")
     val support = new ParquetReadSupport(
       None, // convertTz: files carry UTC micros (writer conf)
       false, // row-based materialization, not vectorized
@@ -437,7 +455,7 @@ object shim {
       RebaseSpec(LegacyBehaviorPolicy.CORRECTED, None))
     org.apache.parquet.hadoop.ParquetReader
       .builder(support, new org.apache.hadoop.fs.Path(path))
-      .withConf(conf)
+      .withConf(rowReadConf(schema))
       .build()
   }
 
